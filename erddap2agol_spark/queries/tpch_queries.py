@@ -4,8 +4,10 @@ The reference's enrichment joins and summary aggregates (SURVEY §2.4/§2.5)
 generalize to the classic decision-support shapes; each query here is the
 standard TPC-H pattern re-keyed to the columns the driver tables actually
 carry, with the physical plan called out: which side broadcasts, where the
-one shuffle lands, what the top-k compiles to. Revenue sums round to 2dp
-on both engines so cross-engine float summation order can't flip a hash.
+one shuffle lands, what the top-k compiles to. Revenue sums round on both
+engines so cross-engine float summation order can't flip a hash; q3 rounds
+at the exact-decimal precision of price x discount (4dp), because at 2dp
+an exact ``…50`` tie lands on either side depending on summation order.
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ _Q3_DATE = "1998-06-01"
     "q3_shipping_priority",
     oracle=f"""
     SELECT l_orderkey,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
+           round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue,
            o_orderdate
     FROM customer, orders, lineitem
     WHERE c_mktsegment = 'BUILDING'
@@ -58,7 +60,7 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_orderkey", "o_orderdate")
         .agg(
             F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
+                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
             ).alias("revenue")
         )
         .select("l_orderkey", "revenue", "o_orderdate")

@@ -83,6 +83,12 @@ def get_spark(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
+        # Whole-stage codegen class cache: Spark's default of 100 entries
+        # is smaller than the ~255 distinct generated classes of a ten-query
+        # pass over the registry, so every pass recompiled ~253 of them
+        # (Janino, then a fresh JIT of the new classes) and pass times kept
+        # drifting.  4000 entries hold ~15 such passes' worth of classes.
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
         .config("spark.ui.enabled", "false")
     )
     if master:

@@ -23,17 +23,24 @@ tile; the driver writes only the metadata document (O(tiles) rows, no
 pixel ever crosses the driver).  Missing cells and NaN values are
 stored as ``nodata`` and surface as NULL on readback.
 
-The lattice (axis origin/step/size) is derived from the data with two
-small distinct-aggregates (bounded by axis length, not cell count) —
-the same metadata-not-data discipline as the chunk planner (O4).
+The source is evaluated ONCE: the writer pins ``cells``
+(``MEMORY_AND_DISK``, unless the caller already cached it) and derives
+the lattice (axis origin/step/size) with one aggregate over the pinned
+cells — two axis sets, bounded by axis length, not cell count — whose
+job also fills the cache, so a griddap HTTP source is fetched and
+decoded once and the tile write reads from memory.  The pin is released
+before the call returns.  Same metadata-not-data discipline as the
+chunk planner (O4).
 """
 
 from __future__ import annotations
 
 import json
+from collections.abc import Collection
 from dataclasses import dataclass
 
 import numpy as np
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -84,7 +91,7 @@ class Lattice:
 
 
 def _axis(
-    values: list[float], descending: bool
+    values: Collection[float], descending: bool
 ) -> tuple[float, float, int, tuple[float, ...] | None, bool]:
     """One axis -> (origin, step, n, explicit_values_or_None, uniform).
 
@@ -111,8 +118,25 @@ def _axis(
 
 
 def derive_lattice(cells: DataFrame, lat_col: str, lon_col: str) -> Lattice:
-    lats = [r[0] for r in cells.select(lat_col).distinct().collect()]
-    lons = [r[0] for r in cells.select(lon_col).distinct().collect()]
+    """Lattice of ``cells`` from one aggregate job: both axis value sets
+    plus a count of null/NaN coordinates per axis.  A null/NaN coordinate
+    has no lattice position: ``ValueError`` naming its column."""
+
+    def bad(c: str):
+        return F.count_if(F.col(c).isNull() | F.isnan(c))
+
+    row = cells.agg(
+        F.collect_set(lat_col), F.collect_set(lon_col), bad(lat_col), bad(lon_col)
+    ).first()
+    for col, n_bad in ((lat_col, row[2]), (lon_col, row[3])):
+        if n_bad:
+            raise ValueError(
+                f"lattice column {col!r} holds {n_bad} null/NaN value(s)"
+            )
+    # collect_set dedups -0.0 against 0.0 but may keep either one; +0.0
+    # folds it to 0.0, the value a grouping (distinct) would surface
+    lats = {v + 0.0 for v in row[0]}
+    lons = {v + 0.0 for v in row[1]}
     lat0, dlat, n_lat, lat_vals, lat_u = _axis(lats, descending=True)  # north first
     lon0, dlon, n_lon, lon_vals, lon_u = _axis(lons, descending=False)
     return Lattice(
@@ -122,26 +146,21 @@ def derive_lattice(cells: DataFrame, lat_col: str, lon_col: str) -> Lattice:
     )
 
 
-def write_raster_tiles(
+def _write_tiles(
     cells: DataFrame,
+    lattice: Lattice,
     root: str,
-    var_col: str = "var",
-    slice_cols: tuple[str, ...] = ("time",),
-    lat_col: str = "lat",
-    lon_col: str = "lon",
-    value_col: str = "value",
-    tile_h: int = 4,
-    tile_w: int = 4,
-    nodata: float = -9999.0,
-) -> dict:
-    """Long-form cells -> tiled raster store; returns the metadata doc.
-
-    ``slice_cols`` are the non-spatial dimensions (time, level) — one
-    2-D tile grid per distinct combination.  Values equal to ``nodata``
-    must not occur as real data (the reference's copy_raster carries the
-    same caveat).
-    """
-    lattice = derive_lattice(cells, lat_col, lon_col)
+    var_col: str,
+    slice_cols: tuple[str, ...],
+    lat_col: str,
+    lon_col: str,
+    value_col: str,
+    tile_h: int,
+    tile_w: int,
+    nodata: float,
+) -> list:
+    """Stamp each cell with its tile key and write the tiles, one
+    ``applyInPandas`` group per tile; returns the manifest rows."""
     spark = cells.sparkSession
     if lattice.lat_uniform:
         iy = F.round(
@@ -231,7 +250,7 @@ def write_raster_tiles(
             ]
         )
 
-    manifest_rows = (
+    return (
         stamped.groupBy("var", "slice", "ty", "tx")
         .applyInPandas(
             build_tile,
@@ -240,6 +259,44 @@ def write_raster_tiles(
         )
         .collect()
     )
+
+
+def write_raster_tiles(
+    cells: DataFrame,
+    root: str,
+    var_col: str = "var",
+    slice_cols: tuple[str, ...] = ("time",),
+    lat_col: str = "lat",
+    lon_col: str = "lon",
+    value_col: str = "value",
+    tile_h: int = 4,
+    tile_w: int = 4,
+    nodata: float = -9999.0,
+) -> dict:
+    """Long-form cells -> tiled raster store; returns the metadata doc.
+
+    ``slice_cols`` are the non-spatial dimensions (time, level) — one
+    2-D tile grid per distinct combination.  Values equal to ``nodata``
+    must not occur as real data (the reference's copy_raster carries the
+    same caveat).
+    """
+    # pin the source for the call so the lattice job and the tile write
+    # share ONE evaluation (a griddap HTTP source otherwise re-fetches
+    # every division URL per action); a caller's own cache is reused and
+    # left in place.  The release blocks, so no block removal runs under
+    # the caller's next action
+    pinned = cells.storageLevel == StorageLevel.NONE
+    if pinned:
+        cells.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        lattice = derive_lattice(cells, lat_col, lon_col)
+        manifest_rows = _write_tiles(
+            cells, lattice, root, var_col, slice_cols, lat_col, lon_col,
+            value_col, tile_h, tile_w, nodata,
+        )
+    finally:
+        if pinned:
+            cells.unpersist(blocking=True)
     meta = {
         "wkid": WKID,
         "nodata": nodata,

@@ -242,6 +242,47 @@ def test_griddap_http_retries_transient_failures(spark, grid_server):
     assert df.count() > 0
 
 
+def test_raster_publish_fetches_each_division_once(spark, grid_server, tmp_path):
+    """The raster writer evaluates its source once: the lattice job and
+    the tile write share one fetch + decode of every division URL, and
+    the pin the call took is gone when it returns."""
+    from pyspark import StorageLevel
+
+    from erddap2agol_spark.sinks import raster
+    from erddap2agol_spark.sources import netcdf as nc
+
+    s, base, _, paths = grid_server
+    urls = [base + p for p in paths]
+    cells = nc.read_griddap_netcdf_http(spark, urls)
+    meta = raster.write_raster_tiles(
+        cells, str(tmp_path / "r"), slice_cols=("time", "altitude")
+    )
+    assert meta["tiles"]
+    assert len(s.request_log) == len(urls)  # one GET per division URL
+    assert cells.storageLevel == StorageLevel.NONE  # call-pinned, released
+
+
+def test_raster_publish_keeps_a_caller_cache(spark, grid_server, tmp_path):
+    """A frame the caller already cached is reused as-is (still one GET
+    per URL) and stays cached after the call."""
+    from pyspark import StorageLevel
+
+    from erddap2agol_spark.sinks import raster
+    from erddap2agol_spark.sources import netcdf as nc
+
+    s, base, _, paths = grid_server
+    urls = [base + p for p in paths]
+    cells = nc.read_griddap_netcdf_http(spark, urls).persist(StorageLevel.MEMORY_ONLY)
+    try:
+        raster.write_raster_tiles(
+            cells, str(tmp_path / "r"), slice_cols=("time", "altitude")
+        )
+        assert len(s.request_log) == len(urls)
+        assert cells.storageLevel == StorageLevel.MEMORY_ONLY
+    finally:
+        cells.unpersist()
+
+
 # ---------------------------------------------------------------------------
 # ST2 over the wire: If-Modified-Since conditional fetch + NRT refresh
 # ---------------------------------------------------------------------------

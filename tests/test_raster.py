@@ -8,6 +8,7 @@ import os
 
 import numpy as np
 import pytest
+from pyspark import StorageLevel
 
 from erddap2agol_spark.sinks import raster
 
@@ -170,3 +171,50 @@ def test_separator_in_slice_value_cannot_collide(spark, tmp_path):
     )
     slices = {t["slice"] for t in meta["tiles"]}
     assert slices == {"a|b", "a%7Cb|x"}
+
+
+def _distinct_lattice(cells):
+    """Reference axes from a grouping-based ``distinct()`` per axis."""
+    lats = [r[0] for r in cells.select("lat").distinct().collect()]
+    lons = [r[0] for r in cells.select("lon").distinct().collect()]
+    return raster._axis(lats, descending=True), raster._axis(lons, descending=False)
+
+
+def test_signed_zero_axis_matches_distinct_lattice(spark):
+    """An axis through 0 holding both -0.0 and 0.0 is ONE lattice
+    position carrying +0.0, exactly as the grouping-based distinct()
+    path saw it — collect_set may keep -0.0 as the set's representative,
+    which would leak ``-0.0`` into the origin and manifest axes.  Fields
+    compare by repr because -0.0 == 0.0."""
+    rows = [
+        ("v", "t0", lat, lon, 1.0)
+        for lat in (1.0, -0.0, 0.0, -2.0)  # irregular: explicit axis
+        for lon in (-0.0, 0.0, 1.0, 2.0)  # uniform, zero is the origin
+    ]
+    cells = spark.createDataFrame(
+        rows, "var string, t string, lat double, lon double, value double"
+    )
+    lat_axis, lon_axis = _distinct_lattice(cells)
+    got = raster.derive_lattice(cells, "lat", "lon")
+    lat_got = (got.lat0, got.dlat, got.n_lat, got.lats, got.lat_uniform)
+    lon_got = (got.lon0, got.dlon, got.n_lon, got.lons, got.lon_uniform)
+    assert repr(lat_got) == repr(lat_axis) and repr(lon_got) == repr(lon_axis)
+    assert got.lats == (1.0, 0.0, -2.0) and repr(got.lon0) == "0.0"
+
+
+@pytest.mark.parametrize(
+    "col, bad", [("lat", None), ("lat", float("nan")), ("lon", None), ("lon", float("nan"))]
+)
+def test_null_or_nan_coordinate_raises_naming_the_column(spark, tmp_path, col, bad):
+    """A null/NaN coordinate has no lattice position: a ValueError that
+    names the column, not a TypeError out of sorted() or a lattice built
+    around NaN — and the writer's pin is released on the way out."""
+    rows = [("v", "t0", 30.0, -95.0, 1.0), ("v", "t0", 29.0, -94.0, 2.0)]
+    rows.append(("v", "t0", bad if col == "lat" else 28.0,
+                 bad if col == "lon" else -93.0, 3.0))
+    cells = spark.createDataFrame(
+        rows, "var string, t string, lat double, lon double, value double"
+    )
+    with pytest.raises(ValueError, match=f"'{col}'"):
+        raster.write_raster_tiles(cells, str(tmp_path / "r"), slice_cols=("t",))
+    assert cells.storageLevel == StorageLevel.NONE

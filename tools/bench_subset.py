@@ -22,7 +22,11 @@ def main() -> None:
     n_runs = 3
     if "--runs" in argv:
         i = argv.index("--runs")
-        n_runs = int(argv[i + 1])
+        try:
+            n_runs = int(argv[i + 1])
+        except (IndexError, ValueError):
+            print(__doc__, file=sys.stderr)
+            sys.exit(2)
         del argv[i : i + 2]
     names = [a for a in argv if not a.startswith("--")]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
