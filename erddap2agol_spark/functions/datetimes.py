@@ -250,8 +250,3 @@ def decode_datetime_df(df, col: str, out_col: str = "decoded"):
     tail = base.filter(F.col(out_col).isNull() & c.isNotNull())
     fixed = tail.withColumn(out_col, decode_datetime_udf(c))
     return done.unionByName(fixed)
-
-
-def iso_z_format(col: Column) -> Column:
-    """F3: ISO-8601 'Z' rendering (src/data_wrangler.py:363-365)."""
-    return F.date_format(col, "yyyy-MM-dd'T'HH:mm:ss'Z'")

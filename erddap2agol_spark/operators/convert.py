@@ -198,7 +198,3 @@ def apply_converters(df: DataFrame, names: list[str]) -> DataFrame:
         if out is not None:
             df = out
     return df
-
-
-def list_converters() -> list[str]:
-    return sorted(_CONVERTERS)

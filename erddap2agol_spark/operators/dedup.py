@@ -23,79 +23,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.parallelism import (
+    PAIR_JOIN_FANOUT_WEIGHT,
+    VECTOR_FANOUT_WEIGHT,
+    ensure_parallelism,
+    input_bytes,
+)
 
-#: parquet-footer row-group counts — driver-side metadata reads, same
-#: class of work as Spark's own file listing.  One entry per PATH,
-#: validated by (mtime, size): a rewritten/rotated file replaces its
-#: entry instead of accumulating dead keys for the process lifetime,
-#: and the size component narrows the 1-second-mtime staleness window
-#: of an in-place overwrite (ADVICE r9).
-_ROW_GROUP_CACHE: dict[str, tuple[tuple[float, int], int]] = {}
-
-
-def _scan_units(df: DataFrame, target: int) -> int | None:
-    """Upper bound on the scan's NON-EMPTY partitions, or None when it
-    cannot be determined cheaply.
-
-    Byte-range splits of a parquet file cannot split a row group (a
-    task reads the row groups whose midpoint falls in its range), so a
-    scan floored to N splits of a file with fewer row groups has empty
-    partitions and ``getNumPartitions()`` overstates real parallelism.
-    Only consulted for narrow scan-rooted plans with fewer files than
-    ``target`` — a shuffle-made partitioning is real, and >= target
-    files give >= target nonempty tasks at any split size.
-    """
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files or len(files) >= target:
-        return None
-    # a shuffle/repartition in the plan makes the partitioning real
-    try:
-        if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
-            return None
-    except Exception:
-        return None
-    units = 0
-    for uri in files:
-        if uri.startswith("file:"):
-            path = uri[len("file://"):] if uri.startswith("file://") else uri[5:]
-        elif uri.startswith("/"):
-            path = uri
-        else:
-            return None  # remote store: footers not locally readable
-        try:
-            import os
-
-            st = os.stat(path)
-            stamp = (st.st_mtime, st.st_size)
-            hit = _ROW_GROUP_CACHE.get(path)
-            if hit is not None and hit[0] == stamp:
-                n = hit[1]
-            else:
-                import pyarrow.parquet as pq
-
-                n = pq.ParquetFile(path).metadata.num_row_groups
-                _ROW_GROUP_CACHE[path] = (stamp, n)
-            units += max(1, n)
-        except Exception:
-            return None
-    return units
-
-
-#: Input bytes (compressed parquet) per fan-out task.  Fan-out operators
-#: multiply input 10-100x (shingles, token bigrams, hash bands) and
-#: parquet decompresses ~4x, so 256 KiB of input is ~10-100 MB of
-#: in-flight rows per task — the guide §2.6 partition sweet spot.  The
-#: derived target is what makes the floor SCALE-ADAPTIVE: a 600 KB local
-#: documents table gets 3 tasks instead of a cluster-width 32 (measured
-#: r9: the 32-way repartition of the 5k-doc sf0.1 corpus cost every
-#: downstream stage 32 near-empty tasks — lm_perplexity 1.34 s -> 0.95 s,
-#: minhash_signatures 0.81 s -> 0.70 s at the derived width), while
-#: anything over ~8 MB ships at full defaultParallelism exactly as
-#: before.
-FANOUT_INPUT_BYTES_PER_TASK = 256 << 10
 
 #: Input-size gate for jaccard_pairs_auto's shared probe/join explode
 #: (ADVICE r9): below this the exploded posting relation is persisted
@@ -104,119 +38,6 @@ FANOUT_INPUT_BYTES_PER_TASK = 256 << 10
 #: boilerplate-skewed corpora that dispatch to 'prefix' the persist
 #: would materialize the largest relation of the pipeline for nothing.
 SHARED_EXPLODE_MAX_BYTES = 64 << 20
-
-
-def _input_bytes(df: DataFrame) -> int | None:
-    """Total LOCAL file size behind ``df``'s scan, or None when the
-    plan has no file scan / files are remote (driver-side stat only,
-    no job)."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    import os
-
-    total = 0
-    for uri in files:
-        if uri.startswith("file:"):
-            path = uri[len("file://"):] if uri.startswith("file://") else uri[5:]
-        elif uri.startswith("/"):
-            path = uri
-        else:
-            return None
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            return None
-    return total
-
-
-def fanout_width(df: DataFrame, fanout_weight: int = 1) -> int | None:
-    """Explicit shuffle width for a compute-heavy KEYED repartition, or
-    None to leave the width to the planner.
-
-    AQE's partition coalescing sizes post-shuffle partitions by BYTES
-    (advisoryPartitionSizeInBytes), which under-provisions stages whose
-    per-byte compute is far above the scan baseline — the quadratic
-    in-row pair explode of ``graph.copurchase_edges`` ran on 5
-    AQE-coalesced tasks at sf0.1 (956 ms of an 11 MB input; measured
-    r10) because its 6 MB shuffle looks tiny.  An EXPLICIT partition
-    count disables AQE coalescing for that exchange, so it is returned
-    only in the small-input regime where per-core input is below the
-    4 MB openCost floor — at real scale (per-core share above it) the
-    implicit form is returned untouched and AQE/conf own the width, and
-    a keyed aggregate is never capped at core count on big data.
-    """
-    size = _input_bytes(df)
-    if size is None:
-        return None
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if size > 4 * (1 << 20) * par:  # big-data regime: planner owns it
-        return None
-    by_size = -(-size * max(1, fanout_weight) // FANOUT_INPUT_BYTES_PER_TASK)
-    return max(1, min(par, by_size))
-
-
-def ensure_parallelism(
-    df: DataFrame,
-    min_partitions: int | None = None,
-    fanout_weight: int = 1,
-) -> DataFrame:
-    """Repartition iff the input is under-parallelized for fan-out work.
-
-    Fan-out operators (explode to shingles/tokens, pair joins) multiply
-    work 10-100x per input row; when the scan produced few partitions
-    (e.g. one small parquet file -> one task) the whole operator runs on
-    one core. At real scale the scan is already wide and this is a no-op
-    — the check costs a plan walk, not a job.
-
-    The target is derived from the scan's INPUT SIZE
-    (:data:`FANOUT_INPUT_BYTES_PER_TASK`), capped at
-    ``defaultParallelism`` — not a constant: a tiny corpus must not be
-    exploded across the full cluster width (task-launch floor dominates;
-    see the constant's measurements), and a big one must not be capped
-    below it.  Pass ``min_partitions`` to override with an explicit
-    floor.
-
-    ``fanout_weight`` scales the size-derived target for operators whose
-    per-input-byte COMPUTE is far above the explode-and-aggregate
-    baseline the constant was sized for: the PPJoin-style posting joins
-    explode C(df_cap, 2) candidate pairs per posting list, so their
-    first stage wants cluster width at input sizes where a plain shingle
-    count is happy on a few cores (fresh-session bench-protocol medians
-    at sf0.1: dedup_ngram_jaccard 1.9 s at weight 1 vs 1.3 s at the
-    restored width).  The weight multiplies the BYTES side, so the
-    target still shrinks for truly tiny inputs and still caps at
-    defaultParallelism.
-
-    The partition COUNT alone can lie (r9): with the session's
-    scan-parallelism floor (``spark.sql.files.minPartitionNum``) a
-    large single-row-group parquet file splits into >= target
-    byte-ranges of which all but a few are EMPTY — the count passes,
-    the rows still sit on one core, and the fan-out work serializes.
-    For scan-rooted plans with fewer files than the target, the
-    parquet footers' row-group count (:func:`_scan_units`, a cached
-    driver-side metadata read) bounds the real parallelism instead.
-    """
-    target = min_partitions
-    if target is None:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        size = _input_bytes(df)
-        if size is not None:
-            by_size = -(
-                -size * max(1, fanout_weight) // FANOUT_INPUT_BYTES_PER_TASK
-            )  # ceil div
-            target = max(1, min(target, by_size))
-    if target <= 1:
-        return df
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    units = _scan_units(df, target)
-    if units is not None and units < target:
-        return df.repartition(target)
-    return df
 
 
 def truncate_lineage(df: DataFrame, release: DataFrame | None = None) -> DataFrame:
@@ -582,21 +403,6 @@ def simhash_near_pairs(
     )
 
 
-#: fanout_weight for the PPJoin-style posting pair joins (consumed by
-#: _shingle_rows): the join explodes C(df, 2) candidate pairs per
-#: posting list, so its per-input-byte compute is an order of magnitude
-#: above the plain-explode baseline.  Re-adjudicated r10 under an
-#: INTERLEAVED same-process A/B at both core counts (VERDICT r9 #4 —
-#: full table in OPTIMIZATION_r10.md): weight 1 under-provisions the
-#: join stage at every core count (c32 medians: ngram 3.00 s, auto
-#: 2.98 s), weight 16 over-widens it to full cluster width at c32
-#: (ngram 2.24 s, auto 3.10 s — the driver's r9 finding), and weight 4
-#: sits at the knee (ngram 1.77 s, auto 2.06 s).  At c8 weights 4 and
-#: 16 derive the SAME width (both cap at defaultParallelism), so the
-#: choice only moves high-core-count behavior.
-PAIR_JOIN_FANOUT_WEIGHT = 4
-
-
 def _shingle_rows(
     df: DataFrame, id_col: str, text_col: str, shingle_n: int
 ) -> DataFrame:
@@ -836,7 +642,7 @@ def embedding_cosine_pairs(
     :func:`erddap2agol_spark.operators.similarity.sign_lsh_topk`, which
     buckets by projection signs first.
     """
-    from .similarity import VECTOR_FANOUT_WEIGHT, cosine, with_norm
+    from .similarity import cosine, with_norm
 
     v = with_norm(
         ensure_parallelism(df, fanout_weight=VECTOR_FANOUT_WEIGHT), id_col, vec_col
@@ -1328,7 +1134,7 @@ def jaccard_pairs_auto(
     rebuilds it, exactly as before.
     """
     if probe_sample_rate is None:
-        size = _input_bytes(df)
+        size = input_bytes(df)
         if size is not None and size <= SHARED_EXPLODE_MAX_BYTES:
             from pyspark import StorageLevel
 

@@ -23,27 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.parallelism import COPURCHASE_FANOUT_WEIGHT, fanout_width, loop_width
 from .dedup import truncate_lineage
-
-#: Target rows per task for an iterated (loop-invariant) relation.  An
-#: iterative pass over a SMALL graph is task-launch floor, not data: a
-#: 3.6k-edge graph iterated 4 rounds at 32-partition granularity launches
-#: ~400 near-empty tasks where 12 would do (measured: LPA on the sf0.1
-#: repeat-co-purchase graph 4.5 s -> 2.0 s from compaction alone, guide
-#: §2.6 scale-adaptive partitioning).  Big graphs are unaffected — the
-#: count-derived partition target caps at defaultParallelism, and AQE can
-#: still split skewed partitions downstream.
-LOOP_ROWS_PER_TASK = 400_000
-
-
-def _loop_partitions(n_rows: int, df: DataFrame) -> int:
-    """Partition count for an iterated relation of ``n_rows`` rows:
-    ~:data:`LOOP_ROWS_PER_TASK` rows per task, clamped to
-    [1, defaultParallelism].  Derived from a measured count, so the
-    compaction is scale-adaptive rather than tuned to either local mode
-    or a cluster."""
-    target = -(-int(n_rows) // LOOP_ROWS_PER_TASK)  # ceil div
-    return max(1, min(target, df.sparkSession.sparkContext.defaultParallelism))
 
 
 def node_degrees(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
@@ -138,12 +119,11 @@ def copurchase_edges(
     # a duplicate-heavy caller would prefer the partial-aggregate form
     # it replaces, since there map-side combine does shrink the
     # exchange).  The width is EXPLICIT in the small-input regime
-    # (dedup.fanout_width): the downstream explode is quadratic per
-    # group, and AQE's byte-based coalescing otherwise parks it on a
-    # handful of tasks (5 tasks / 956 ms at sf0.1, measured r10).
-    from .dedup import fanout_width
-
-    width = fanout_width(df, fanout_weight=8)
+    # (plans.parallelism.fanout_width): the downstream explode is
+    # quadratic per group, and AQE's byte-based coalescing otherwise
+    # parks it on a handful of tasks (5 tasks / 956 ms at sf0.1,
+    # measured r10).
+    width = fanout_width(df, fanout_weight=COPURCHASE_FANOUT_WEIGHT)
     sets = (
         df.repartition(width, F.col(group_col))
         if width
@@ -264,11 +244,9 @@ def pagerank(
             n_nodes <= broadcast_nodes_max and n_sym >= 8 * n_nodes
         )
         n_known = int(n_nodes)
-        # scale-adaptive loop compaction (see _loop_partitions): size
-        # the per-round relation's task count from the measured n_sym
-        np_ = _loop_partitions(n_sym, deg)
-        if np_ < deg.sparkSession.sparkContext.defaultParallelism:
-            nparts = np_
+        # scale-adaptive loop compaction (plans.parallelism.loop_width):
+        # size the per-round relation's task count from the measured n_sym
+        nparts = loop_width(n_sym, deg)
     # deg RIDES the edge relation (the oracle's own ``g`` shape,
     # re-adopted r10 after an interleaved A/B + event-log profile —
     # fresh-session run walls 13.9/7.2/5.7/5.3 s vs the r9/r10
@@ -505,11 +483,9 @@ def label_propagation(
         )
         # scale-adaptive loop compaction: the probe's n_sym prices the
         # rounds — a small graph iterated at full-cluster granularity is
-        # pure task-launch floor (see _loop_partitions).  None = big
-        # graph, keep ambient parallelism.
-        np_ = _loop_partitions(n_sym, sym)
-        if np_ < sym.sparkSession.sparkContext.defaultParallelism:
-            nparts = np_
+        # pure task-launch floor (plans.parallelism.loop_width).  None =
+        # big graph, keep ambient parallelism.
+        nparts = loop_width(n_sym, sym)
     if broadcast_labels or nparts:
         # dst-partitioned form for the rounds: in broadcast mode both
         # per-round aggregates reuse HashPartitioning(dst)

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import ensure_parallelism
+from ..plans.parallelism import ensure_parallelism
 from .text import tokens as _text_tokens
 
 #: add-k smoothing constant for the bigram model.

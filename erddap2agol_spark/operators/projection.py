@@ -86,12 +86,3 @@ def metadata_projection(
     ]
     # reference orders depth (when required) ahead of the rest
     return df.select(*req, *kept)
-
-
-def grid_measure_columns(
-    columns: Sequence[str], dims: Iterable[str] = GRID_DIM_NAMES
-) -> list[str]:
-    """Griddap measure-variable selection (P2): everything except dims and
-    ``l2_*`` bookkeeping (src/das_client.py:245-296)."""
-    dimset = set(dims)
-    return [c for c in columns if c not in dimset and not c.startswith("l2_")]

@@ -19,14 +19,7 @@ import pandas as pd  # module-level so PEP-563 string hints on pandas
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-#: fanout_weight for the vector-scoring fan-outs (brute-force cosine,
-#: in-bucket LSH scoring): the per-row work is an interpreted
-#: higher-order-function dot product times the candidate multiplicity,
-#: far above the scan baseline ensure_parallelism's 256 KiB/task
-#: constant was sized for (ADVICE r9: quadratic callers sized tasks by
-#: input bytes).  Adjudicated by the same interleaved A/B protocol as
-#: dedup.PAIR_JOIN_FANOUT_WEIGHT — table in OPTIMIZATION_r10.md.
-VECTOR_FANOUT_WEIGHT = 8
+from ..plans.parallelism import VECTOR_FANOUT_WEIGHT, ensure_parallelism
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -153,35 +146,6 @@ def dot_arrow(a: Column, b: Column) -> Column:
     return _dot(a, b)
 
 
-def dot_arrow_fast(a: Column, b: Column) -> Column:
-    """Arrow-batched pairwise dot product via ``einsum`` — the MATRIX
-    scoring form for candidate-pair rescoring (VERDICT r5 #3).
-
-    ``einsum('ij,ij->i', dtype=f64)`` uses SIMD partial accumulators, so
-    it is NOT bit-identical to the left-to-right fold (measured max
-    |diff| ~3e-14 at 753k x 64) but is ~14x faster than the per-column
-    fold loop.  Callers MUST consume it through the half-up 6dp rounding
-    contract proven by :func:`brute_force_topk_matrix` (round the
-    cosine, compare/rank only the rounded value): a 1e-14 drift flips a
-    6dp rounding only at an exact midpoint, and the graded corpora
-    hash-match the DuckDB oracle under it (parity suite).  Where a stage
-    needs the fold's exact bits (un-rounded comparisons), use
-    :func:`dot_arrow` instead.
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _dot(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        if len(xs) == 0:
-            return pd.Series([], dtype="float64")
-        xm = _stack_rows(xs)
-        ym = _stack_rows(ys)
-        return pd.Series(np.einsum("ij,ij->i", xm, ym, dtype=np.float64))
-
-    return _dot(a, b)
-
-
 def norm(a: Column) -> Column:
     return F.sqrt(
         F.aggregate(
@@ -226,8 +190,6 @@ def brute_force_topk(
     the per-query top-k aggregate; the window partitions by query id so
     ranking state is per-query.
     """
-    from .dedup import ensure_parallelism
-
     q = with_norm(queries, id_col, vec_col).alias("q")
     c = with_norm(
         ensure_parallelism(corpus, fanout_weight=VECTOR_FANOUT_WEIGHT),
@@ -430,8 +392,6 @@ def ivf_topk(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    from .dedup import ensure_parallelism
-
     corpus = ensure_parallelism(corpus)
     as_vec = corpus.select(
         F.col(id_col).alias("id"),
@@ -517,8 +477,6 @@ def sign_lsh_topk(
     shape. Recall < 1.0 by construction (neighbors in other buckets are
     missed); multi-probe or multiple hash tables raise it.
     """
-    from .dedup import ensure_parallelism
-
     q = with_norm(queries, id_col, vec_col).withColumn("bucket", sign_bucket(F.col("vec"), bits))
     c = with_norm(
         ensure_parallelism(corpus, fanout_weight=VECTOR_FANOUT_WEIGHT),
@@ -627,8 +585,6 @@ def assign_cells(
     (measured 7s single-task at sf0.1).  Pass ``fan_out=False`` for a
     small QUERY side — a handful of probe rows gains nothing from a
     repartition exchange and the plan walk it costs."""
-    from .dedup import ensure_parallelism
-
     side = ensure_parallelism(side) if fan_out else side
     sn = with_norm(side, id_col, vec_col)
     scored = sn.crossJoin(F.broadcast(cells)).select(
@@ -682,14 +638,12 @@ def assign_cells_fast(
     cluster scale this is an embarrassingly parallel scan stage.
 
     Numeric contract: the GEMM's SIMD accumulation is not bit-identical
-    to the fold `dot` (same trade as :func:`dot_arrow_fast`, ulp-level
-    drift) — consumers compare only the half-up-6dp ROUNDED cosine, the
-    repo-wide contract the graded corpora hash-match under.  Zero-norm
+    to the fold `dot` (ulp-level drift) — consumers compare only the
+    half-up-6dp ROUNDED cosine, the repo-wide contract the graded
+    corpora hash-match under.  Zero-norm
     vectors (NaN cosine) rank GREATEST with the label tie-break,
     matching Spark's NaN ordering in ``assign_cells``."""
     import numpy as np
-
-    from .dedup import ensure_parallelism
 
     cells_pdf = cells.toPandas()
     id_t = side.schema[id_col].dataType.simpleString()

@@ -48,14 +48,6 @@ def duckdb_hex_int(expr: str, nibbles: int) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def uniform_hash(col: Column, nibbles: int = KMV_NIBBLES) -> Column:
-    """md5-derived uniform double in [0, 1): first ``nibbles`` hex chars
-    as an integer, scaled by 16^nibbles.  48 bits < the 53-bit mantissa,
-    so the double is exact and engine-portable."""
-    hv = F.conv(F.substring(F.md5(col), 1, nibbles), 16, 10).cast("long")
-    return hv / F.lit(float(16**nibbles))
-
-
 def kmv_distinct(df: DataFrame, key: Column, k: int, by: Column | None = None) -> DataFrame:
     """Distinct-count estimate via the k smallest hashes, optionally per
     group.  Emits ``(group?, n_kept, kth_hash, est_distinct)``; when

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from ..plans.parallelism import ensure_parallelism
+
 #: Tiny per-language stopword marker lists for the n-gram/stopword
 #: language-ID heuristic. Ordered: first match priority on ties.
 LANG_MARKERS: dict[str, tuple[str, ...]] = {
@@ -236,8 +238,6 @@ def contamination_counts(docs, bench_sources: tuple[str, ...], n: int = 5):
     benchmark sizes hash n-grams (md5) before the join so the broadcast
     carries 16-byte keys, not strings.
     """
-    from .dedup import ensure_parallelism
-
     grams = ensure_parallelism(docs).select(
         "doc_id",
         "source",
@@ -373,8 +373,6 @@ def bloom_contamination(docs, bench_sources: tuple[str, ...], n: int = 5):
     like :func:`contamination_counts`, which remains the exact
     verifier for flagged docs.
     """
-    from .dedup import ensure_parallelism
-
     grams = ensure_parallelism(docs).select(
         "doc_id",
         "source",
@@ -518,8 +516,6 @@ def boilerplate_hot_segments(docs, id_col: str, text_col: str,
     no count-distinct state. Hot-set size is bounded by
     total_distinct_segment_occurrences / max_df.
     """
-    from .dedup import ensure_parallelism
-
     segs = ensure_parallelism(docs).select(
         F.col(id_col).alias("doc_id"),
         F.explode(F.array_distinct(segment_array(F.col(text_col), seg_tokens))).alias("seg"),

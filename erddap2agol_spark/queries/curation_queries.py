@@ -523,20 +523,19 @@ def build_corpus_manifest(
     """
     from pyspark.sql import Window
 
-    from ..operators.dedup import ensure_parallelism, truncate_lineage
+    from ..operators.dedup import truncate_lineage
     from ..operators.sampling import hash_bucket
     from ..operators.text import bloom_contamination
+    from ..plans.parallelism import QUALITY_GATE_FANOUT_WEIGHT, ensure_parallelism
 
     from .pipeline_queries import gopher_keep_bit
 
-    # The gopher gate below is dozens of regex/aggregate passes over
-    # the full document text — per-byte compute far above the scan
-    # baseline — and the openCost-floored scan of a small corpus parks
-    # it on 1-3 tasks (measured r10: the two flags stages ran 0.7 s
-    # each single-task at sf0.1).  Weighted fan-out sizes the gate
-    # stage by compute, not bytes; a no-op on an already-wide scan.
+    # The gopher gate below is dozens of regex/aggregate passes over the
+    # full document text, so the fan-out is weighted by compute, not
+    # bytes; a no-op on an already-wide scan.
     corpus = ensure_parallelism(
-        docs.where(~F.col("source").isin(*bench)), fanout_weight=4
+        docs.where(~F.col("source").isin(*bench)),
+        fanout_weight=QUALITY_GATE_FANOUT_WEIGHT,
     )
     if n_shards is None:
         # sizing probe: corpus row count BEFORE gating (upper bound on

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import dedup
+from ..plans.parallelism import ensure_parallelism
 from ..sources.tables import load_table
 from . import register
 
@@ -270,7 +271,7 @@ def dedup_lsh_rescored(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-split scan stage (measured: 8s of the query's 10s at
     # sf0.1).  The filter is redundant anyway — every candidate doc has
     # shingles by construction (it carries a MinHash signature).
-    arr = dedup.ensure_parallelism(docs).select(
+    arr = ensure_parallelism(docs).select(
         F.col("doc_id").alias("doc"), grams.alias("sa")
     )
     inter = F.size(F.array_intersect(F.col("x.sa"), F.col("y.sa")))
@@ -440,7 +441,7 @@ def minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ensure_parallelism: documents at bench SF is a ONE-split parquet
     # scan, and an unspread ~52x shingle fan-out runs single-threaded
     # (measured: the bare explode 8.7 s -> 1.1 s with the spread)
-    sh = dedup.ensure_parallelism(docs).select(
+    sh = ensure_parallelism(docs).select(
         F.col("doc_id").alias("doc"),
         # word_shingles is already distinct per doc
         F.explode(dedup.word_shingles(F.col("text"), 3)).alias("sh"),

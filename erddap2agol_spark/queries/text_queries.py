@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import text as T
+from ..plans.parallelism import ensure_parallelism
 from ..sources.tables import load_table
 from . import register
 
@@ -602,8 +603,6 @@ _CLF_W = f"(CAST({_hex8_num(_CLF_MD5)} AS DOUBLE) / 2147483648.0 - 1.0)"
     "possible quality gate at corpus scale.",
 )
 def quality_linear_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import ensure_parallelism
-
     docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     return T.linear_classifier_score(docs, "text").select("doc_id", "clf_score")
 
@@ -723,9 +722,9 @@ def source_shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import dedup
 
     # one small parquet file = one input split; the shingle explode is
-    # the expensive map, so fan it out first (same ensure_parallelism
-    # discipline as every dedup operator — measured 4x here)
-    docs = dedup.ensure_parallelism(load_table(spark, sf_dir, "documents"))
+    # the expensive map, so fan it out first (the plans.parallelism
+    # policy every fan-out operator follows — measured 4x here)
+    docs = ensure_parallelism(load_table(spark, sf_dir, "documents"))
     # ONE corpus-sized exchange (VERDICT r7 #2): the old form ran a
     # (source, sh) distinct shuffle AND a groupBy(sh) shuffle, but
     # collect_set already dedups sources per shingle, and the per-source

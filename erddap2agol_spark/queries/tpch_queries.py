@@ -5,9 +5,10 @@ generalize to the classic decision-support shapes; each query here is the
 standard TPC-H pattern re-keyed to the columns the driver tables actually
 carry, with the physical plan called out: which side broadcasts, where the
 one shuffle lands, what the top-k compiles to. Revenue sums round on both
-engines so cross-engine float summation order can't flip a hash; q3 rounds
-at the exact-decimal precision of price x discount (4dp), because at 2dp
-an exact ``…50`` tie lands on either side depending on summation order.
+engines so cross-engine float summation order can't flip a hash; q3, q7
+and q10 round at the exact-decimal precision of price x discount (4dp),
+because at 2dp an exact ``…50`` tie lands on either side depending on
+summation order.
 """
 
 from __future__ import annotations
@@ -281,7 +282,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q10_returned_items",
     oracle="""
     SELECT c_custkey, c_name, n_name,
-           round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
+           round(sum(l_extendedprice * (1 - l_discount)), 4) AS revenue
     FROM customer
     JOIN orders ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -321,7 +322,7 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_custkey", "c_name", "n_name")
         .agg(
             F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
+                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
             ).alias("revenue")
         )
         .orderBy(F.desc("revenue"), "c_custkey")
@@ -433,7 +434,7 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q7_volume_shipping",
     oracle="""
-    SELECT supp_nation, cust_nation, l_year, round(sum(volume), 2) AS revenue
+    SELECT supp_nation, cust_nation, l_year, round(sum(volume), 4) AS revenue
     FROM (
       SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
              CAST(year(l_shipdate) AS INT) AS l_year,
@@ -492,7 +493,7 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
+                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
             ).alias("revenue")
         )
         .orderBy("supp_nation", "cust_nation", "l_year")

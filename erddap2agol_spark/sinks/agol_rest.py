@@ -290,8 +290,3 @@ def read_service(
             break
         offset += len(feats)
     return spark.createDataFrame(rows, schema=schema)
-
-
-def sanitize_service_name(title: str) -> str:
-    """F7 on service names (same rule as the directory portal)."""
-    return sanitize_item_name(title)

@@ -71,18 +71,6 @@ def newer_than_watermark(df: DataFrame, ts_col: str, sink_dir: str) -> DataFrame
     return df.filter(F.col(ts_col) > F.lit(hwm).cast("timestamp"))
 
 
-def advance_watermark(df: DataFrame, ts_col: str, sink_dir: str) -> str | None:
-    """Record max(ts) of the just-committed batch. Returns the new HWM."""
-    row = df.agg(F.max(ts_col).alias("mx")).first()
-    if row["mx"] is None:
-        return None
-    state = load_state(sink_dir)
-    hwm = row["mx"].strftime("%Y-%m-%d %H:%M:%S.%f")
-    state["high_water_mark"] = hwm
-    save_state(sink_dir, state)
-    return hwm
-
-
 # ---------------------------------------------------------------------------
 # Content fingerprint gate (ST3)
 # ---------------------------------------------------------------------------

@@ -9,6 +9,8 @@ from __future__ import annotations
 
 from erddap2agol_spark.operators.lm import BPE_SENTINEL_BASE, bpe_train
 
+from .test_opt_r09 import _persistent_rdd_ids
+
 
 def _py_bpe(word_freq: dict[str, int], n_merges: int):
     """Pure-Python mirror: tokens as symbol LISTS (the paper's
@@ -284,14 +286,16 @@ def test_histogram_single_corpus_scan(spark):
     from erddap2agol_spark.operators.dedup import release_checkpoints
     from erddap2agol_spark.operators.lm import bpe_symbol_histogram
 
-    base = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    # id sets, not counts: another test's blocks may be reclaimed by the
+    # asynchronous ContextCleaner during this call
+    base = _persistent_rdd_ids(spark)
     docs = spark.createDataFrame([("low lower low",)], "text string")
     hist = bpe_symbol_histogram(docs, "text", 2, top=50)
     hist.collect()
     # exactly the ONE kept vocabulary checkpoint backs the plan
-    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() == base + 1
+    assert len(_persistent_rdd_ids(spark) - base) == 1
     assert release_checkpoints(hist) >= 1
-    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() <= base
+    assert not (_persistent_rdd_ids(spark) - base)
 
 
 def test_doc_token_counts_match_mirror(spark):

@@ -6,7 +6,8 @@ Each optimization keeps results identical (oracle parity is asserted
 elsewhere); what these tests pin is the LIFECYCLE the optimization
 introduced — a call must leave the CacheManager empty (no leaked
 persist) and the persistent-RDD table at base + 1 (the returned
-checkpoint), returning to base after release_checkpoints."""
+checkpoint), returning to base after release_checkpoints — plus the
+fan-out width policy of plans.parallelism."""
 
 from __future__ import annotations
 
@@ -90,7 +91,8 @@ def test_ensure_parallelism_sees_through_empty_splits(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from erddap2agol_spark.operators.dedup import (
+    from erddap2agol_spark.plans.parallelism import (
+        _local_files,
         _scan_units,
         ensure_parallelism,
     )
@@ -108,27 +110,28 @@ def test_ensure_parallelism_sees_through_empty_splits(spark, tmp_path):
     assert n_parts >= 3, f"fixture too small to split ({n_parts} parts)"
     nonempty = sum(1 for s in df.rdd.glom().map(len).collect() if s)
     assert nonempty == 1, "expected the single-row-group empty-split shape"
-    assert _scan_units(df, 3) == 1
-    out = ensure_parallelism(df, min_partitions=3)
+    assert _scan_units(df, _local_files(df), 3) == 1
+    # ~10 MB of input derives the full defaultParallelism target
+    out = ensure_parallelism(df)
     spread = sum(1 for s in out.rdd.glom().map(len).collect() if s)
     assert spread >= 3, "ensure_parallelism kept the one-core layout"
     # a shuffle-made partitioning is REAL: no second repartition
-    wide = df.repartition(3)
-    assert ensure_parallelism(wide, min_partitions=3) is wide
+    wide = df.repartition(spark.sparkContext.defaultParallelism)
+    assert ensure_parallelism(wide) is wide
 
 
 def test_ensure_parallelism_size_derived_target(spark, tmp_path):
-    """r9: without an explicit floor the target derives from the scan's
-    input BYTES — a tiny file must NOT be exploded to cluster width
-    (task-launch floor dominates fan-out work on small corpora), while
-    a multi-MB file still widens toward defaultParallelism."""
+    """r9: the target derives from the scan's input BYTES — a tiny file
+    must NOT be exploded to cluster width (task-launch floor dominates
+    fan-out work on small corpora), while a multi-MB file still widens
+    toward defaultParallelism."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from erddap2agol_spark.operators.dedup import (
+    from erddap2agol_spark.plans.parallelism import (
         FANOUT_INPUT_BYTES_PER_TASK,
-        _input_bytes,
         ensure_parallelism,
+        input_bytes,
     )
 
     small_dir = tmp_path / "small"
@@ -137,13 +140,69 @@ def test_ensure_parallelism_size_derived_target(spark, tmp_path):
                     "text": pa.array(["alpha beta gamma"] * 100)})
     pq.write_table(tbl, str(small_dir / "docs.parquet"))
     small = spark.read.parquet(str(small_dir))
-    size = _input_bytes(small)
+    size = input_bytes(small)
     assert size is not None and size < FANOUT_INPUT_BYTES_PER_TASK
     out = ensure_parallelism(small)
     # target computes to 1: the frame passes through un-repartitioned
     assert out is small
-    # an explicit floor still overrides the size heuristic
-    assert ensure_parallelism(small, min_partitions=2).rdd.getNumPartitions() >= 2
+
+
+def test_fanout_width_small_input_scales_with_weight(spark, tmp_path):
+    """Small-input regime: an explicit width of ceil(bytes x weight /
+    256 KiB), capped at defaultParallelism."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from erddap2agol_spark.plans.parallelism import (
+        FANOUT_INPUT_BYTES_PER_TASK,
+        fanout_width,
+        input_bytes,
+    )
+
+    # ~400 KB of incompressible text in one uncompressed file
+    chars = np.random.default_rng(11).integers(97, 123, (2_000, 200), dtype=np.uint8)
+    texts = chars.view("S200").ravel().astype(str)
+    tbl = pa.table({"doc_id": pa.array(np.arange(2_000)), "text": pa.array(texts)})
+    pq.write_table(tbl, str(tmp_path / "docs.parquet"), compression="none")
+    df = spark.read.parquet(str(tmp_path))
+    par = spark.sparkContext.defaultParallelism
+    size = input_bytes(df)
+    assert 3 * FANOUT_INPUT_BYTES_PER_TASK // 2 < size < 2 * FANOUT_INPUT_BYTES_PER_TASK
+    assert fanout_width(df) == 2
+    assert fanout_width(df, fanout_weight=2) == min(par, 4)
+    assert fanout_width(df, fanout_weight=1_000) == par
+
+
+def test_fanout_width_defers_to_planner(spark, monkeypatch):
+    """No width above 4 MB of input per core (AQE owns it at scale),
+    and none without a local file scan to size."""
+    from erddap2agol_spark.plans import parallelism
+
+    par = spark.sparkContext.defaultParallelism
+    df = spark.range(100)
+    assert parallelism.fanout_width(df) is None
+    floor = 4 * (1 << 20) * par
+    monkeypatch.setattr(parallelism, "input_bytes", lambda _: floor)
+    assert parallelism.fanout_width(df) == par
+    monkeypatch.setattr(parallelism, "input_bytes", lambda _: floor + 1)
+    assert parallelism.fanout_width(df) is None
+
+
+def test_loop_width_from_counted_rows(spark):
+    """~LOOP_ROWS_PER_TASK rows per task; None once that reaches
+    defaultParallelism (a big graph keeps ambient parallelism)."""
+    from erddap2agol_spark.plans.parallelism import LOOP_ROWS_PER_TASK, loop_width
+
+    df = spark.range(1)
+    par = spark.sparkContext.defaultParallelism
+    assert par >= 3
+    assert loop_width(0, df) == 1
+    assert loop_width(LOOP_ROWS_PER_TASK, df) == 1
+    assert loop_width(LOOP_ROWS_PER_TASK + 1, df) == 2
+    assert loop_width(LOOP_ROWS_PER_TASK * (par - 1), df) == par - 1
+    assert loop_width(LOOP_ROWS_PER_TASK * (par - 1) + 1, df) is None
+    assert loop_width(LOOP_ROWS_PER_TASK * par * 10, df) is None
 
 
 def test_jaccard_auto_shared_probe_matches_posting_join(spark):

@@ -325,7 +325,7 @@ class TestJaccardPrefixFilter:
         assert not any(102 in p for p in out)
 
     def test_prefix_explode_smaller_than_full(self, spark):
-        from erddap2agol_spark.operators.dedup import ensure_parallelism, word_shingles
+        from erddap2agol_spark.operators.dedup import word_shingles
 
         docs = self._docs(spark)
         sets = docs.select(
