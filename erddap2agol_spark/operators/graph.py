@@ -260,15 +260,16 @@ def pagerank(
     # BroadcastHashJoin + stage boundary PER ROUND — pure sequential
     # driver latency (guide §1.2: the shape of the job beats
     # per-stage byte counts).
-    # int32 deg on the edge relation in the broadcast regime (guide
-    # §2.3 narrower types): deg <= |V|, and the broadcast regime
-    # asserts |V| fits a broadcast relation (hard cap 512M rows), so
-    # deg < 2^31 provably; int->double promotion in the round's
-    # division is exact, identical IEEE quotient.  The unbounded
-    # equi-join regime keeps the long.
+    # int32 deg on the edge relation when the probe chose the
+    # broadcast regime (guide §2.3 narrower types): deg <= |V|, and the
+    # probe measured |V| to fit a broadcast relation (hard cap 512M
+    # rows), so deg < 2^31 provably; int->double promotion in the
+    # round's division is exact, identical IEEE quotient.  A
+    # caller-forced broadcast_ranks never measured |V|, so it keeps
+    # the long, as does the equi-join regime.
     dcol = deg.select(
         "src", F.col("deg").cast("int").alias("deg")
-    ) if broadcast_ranks else deg.select("src", "deg")
+    ) if broadcast_ranks and n_known is not None else deg.select("src", "deg")
     g = sym.join(F.broadcast(dcol) if broadcast_ranks else dcol, "src")
     # Materialize g BEFORE the dst repartition, and repartition
     # IN-QUERY over the checkpoint (restructured r10, twice):

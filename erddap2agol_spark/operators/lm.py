@@ -24,9 +24,9 @@ Scale notes
 -----------
 - ``bigram_cross_entropy``: token explode happens in the scan stage
   (``transform`` over the split array — no window, no per-doc shuffle).
-  The model join is an equi-join on ``(prev, cur)``; both sides are
-  hash-partitioned on the same key, and the context-count join is
-  vocabulary-sized.  No driver-side state, no collect.
+  The model join is an equi-join on ``(prev, cur)`` against the
+  broadcast, vocabulary-sized model; the context-count join is
+  vocabulary-sized too.  No driver-side state, no collect.
 - ``bpe_pair_counts``: pair explode runs over the *vocabulary*, not the
   corpus.  The round-2 merge constant flows through a one-row broadcast
   cross-join (the canonical scalar-subquery plan), never a collect.
@@ -146,7 +146,6 @@ def bigram_cross_entropy(
     text_col: str,
     k: float = DEFAULT_K,
     extra_cols: tuple[str, ...] = (),
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """Per-document cross-entropy under the corpus's own add-k bigram
     model: ``-mean(ln p(cur|prev))`` with
@@ -157,21 +156,18 @@ def bigram_cross_entropy(
     standard corpus-quality ranking signal.
 
     Plan shape: the model (bigram counts ⋈ context counts ⋈ 1-row V)
-    is assembled on vocabulary-sized tables and — by default —
-    BROADCAST to the scoring side, so the exploded document bigrams
-    never shuffle for the join, and the per-doc average partial-
-    aggregates map-side (a document's bigrams are co-located with the
-    scan split that produced them), leaving only a |docs|-row exchange.
+    is assembled on vocabulary-sized tables and BROADCAST to the
+    scoring side, so the exploded document bigrams never shuffle for
+    the join, and the per-doc average partial-aggregates map-side (a
+    document's bigrams are co-located with the scan split that produced
+    them), leaving only a |docs|-row exchange.
     One corpus-sized shuffle total: the model build's (prev, cur)
     aggregate, whose map-side combine already collapses it to
-    vocabulary cardinality.  Set ``broadcast_model=False`` for corpora
-    whose bigram vocabulary exceeds executor memory (web-scale text
-    with huge vocabularies) — the join then hash-partitions on
-    ``(prev, cur)``.
+    vocabulary cardinality.
     """
     docs = ensure_parallelism(docs)
     cb, cp, vocab = bigram_model(docs, id_col, text_col)
-    model = (
+    model = F.broadcast(
         cb.join(cp, "prev")
         .crossJoin(F.broadcast(vocab))
         .select(
@@ -182,8 +178,6 @@ def bigram_cross_entropy(
             ),
         )
     )
-    if broadcast_model:
-        model = F.broadcast(model)
     # extra_cols ride the scoring explode and the groupBy KEYS instead
     # of a post-agg join (they are functionally dependent on id_col, so
     # the group cardinality is unchanged) — the old side-join was a
@@ -196,90 +190,6 @@ def bigram_cross_entropy(
         .agg(
             F.count(F.lit(1)).alias("n_bigrams"),
             F.avg("neg_logp").alias("cross_entropy"),
-        )
-    )
-
-
-def bigram_cross_entropy_agg(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: float = DEFAULT_K,
-    extra_cols: tuple[str, ...] = (),
-    broadcast_model: bool = True,
-) -> DataFrame:
-    """:func:`bigram_cross_entropy` computed from ONE corpus explode —
-    the single-scan variant.
-
-    The two-pass form reads and explodes the corpus twice (model build
-    + scoring) but never shuffles a corpus-sized relation; this form
-    aggregates the exploded bigrams ONCE per ``(id, prev, cur)``,
-    checkpoints that relation, and derives BOTH the model and the
-    per-document weighted average from it — one corpus read, one
-    corpus-sized exchange (hash-keyed on ``(id, prev, cur)``: doc-id
-    leading, so no stopword-headed skew), then everything downstream is
-    model- or |docs|-sized.
-
-    Which to use: at 100 TB the two-pass form wins when scan bandwidth
-    is cheaper than shuffle (columnar pushdown, hot cache); this form
-    wins when the corpus read dominates (cold object store, wide rows)
-    — it is also the job-floor-minimal local plan.  Results are
-    identical up to float summation order (both sides round before
-    grading).  Callers done with the result free the checkpoint blocks
-    via :func:`~..operators.dedup.release_checkpoints`.
-    """
-    from .dedup import truncate_lineage
-
-    docs = ensure_parallelism(docs)
-    toks = _tokens(F.col(text_col))
-    n = F.size(toks)
-    pairs_all = F.arrays_zip(
-        toks.alias("prev"),
-        # NULL-padded zip: last position pairs (t_n, NULL), keeping every
-        # token a 'prev' so the vocabulary falls out of the aggregate
-        F.slice(toks, 2, F.greatest(n - 1, F.lit(0))).alias("cur"),
-    )
-    dp = (
-        docs.select(F.col(id_col), *extra_cols, F.explode(pairs_all).alias("bg"))
-        .select(
-            id_col,
-            *extra_cols,
-            F.col("bg.prev").alias("prev"),
-            F.col("bg.cur").alias("cur"),
-        )
-        .groupBy(id_col, *extra_cols, "prev", "cur")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    dp = truncate_lineage(dp)
-    scored_pairs = dp.where(F.col("cur").isNotNull())
-    cb = scored_pairs.groupBy("prev", "cur").agg(F.sum("c").alias("nb"))
-    cp = cb.groupBy("prev").agg(F.sum("nb").alias("np"))
-    vocab = dp.agg(F.countDistinct("prev").alias("v"))
-    model = (
-        cb.join(cp, "prev")
-        .crossJoin(F.broadcast(vocab))
-        .select(
-            "prev",
-            "cur",
-            (
-                F.log(F.col("np") + F.lit(k) * F.col("v"))
-                - F.log(F.col("nb") + F.lit(k))
-            ).alias("neg_logp"),
-        )
-    )
-    # same escape hatch as the two-pass twin: set broadcast_model=False
-    # when the bigram vocabulary exceeds executor memory — the scoring
-    # join then hash-partitions on (prev, cur)
-    if broadcast_model:
-        model = F.broadcast(model)
-    return (
-        scored_pairs.join(model, ["prev", "cur"])
-        .groupBy(id_col, *extra_cols)
-        .agg(
-            F.sum("c").alias("n_bigrams"),
-            (F.sum(F.col("c") * F.col("neg_logp")) / F.sum("c")).alias(
-                "cross_entropy"
-            ),
         )
     )
 

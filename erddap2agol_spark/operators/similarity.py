@@ -6,9 +6,7 @@ scale path (candidates meet only within a bucket, so the pair space is
 
 All vector math is JVM-side array algebra (``zip_with`` + ``aggregate``)
 with explicit float→double casts so results are deterministic and
-oracle-comparable; no Python in the loop. For very wide vectors a
-Pandas-UDF/numpy dot is the drop-in alternative — the surrounding algebra
-(join shape, ranking window) is unchanged.
+oracle-comparable; no Python in the loop.
 """
 
 from __future__ import annotations
@@ -95,55 +93,6 @@ def _stack_rows(series: "pd.Series"):
                         if np.shares_memory(out, e0):
                             return out
     return np.vstack(arr)
-
-
-def dot_arrow(a: Column, b: Column) -> Column:
-    """Arrow-batched dot product, bit-identical to :func:`dot`.
-
-    The accumulation loops over DIMENSIONS in order while staying
-    vectorized over ROWS, so every row computes ``((0.0 + x0*y0) + x1*y1)
-    + ...`` in float64 — the exact left-to-right fold order of the
-    higher-order-function form (and of DuckDB's ``list_sum`` oracle), just
-    batched through Arrow instead of interpreted per element.  Swap it in
-    where the dot count is bounded by a CANDIDATE-PAIR set (hundreds of
-    thousands of rows): measured on ``cell_near_dup_pairs`` at sf0.1
-    (753k candidates), the pair-scoring stage fell 5.3 s -> 3.6 s steady
-    with byte-identical output.  For small scoring sets (ANN probes, the
-    |corpus| x L cell assignment) the interpreted fold stays — one
-    whole-stage-codegen span beats an Arrow round-trip it can't amortize.
-
-    Contract: both inputs are non-null fixed-width float arrays.
-
-    r5 GEMM measurement (VERDICT r4 #6, numbers in BENCH_NOTES): a true
-    GEMM (``einsum``/batched ``matmul``) is another ~13x on the
-    arithmetic but uses pairwise summation — NOT bit-identical to the
-    fold (max |diff| ~2e-14), which would void the oracle-determinism
-    contract, so it was measured and REJECTED. What was adopted instead,
-    both bit-exact: (1) zero-copy batch reconstruction — Spark's
-    arrow->pandas conversion hands each row as a VIEW into one shared
-    flat buffer, so the (n, d) matrix is a reshape, not a 200k-row
-    vstack (~8x on conversion); (2) per-column f64 casts inside the dim
-    loop — small cache-resident temporaries instead of materializing
-    both full float64 matrices (~2.7x on the loop). Net: the scoring
-    UDF's Python time fell ~3.4x with byte-identical output.
-    """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _dot(xs: pd.Series, ys: pd.Series) -> pd.Series:
-        if len(xs) == 0:
-            return pd.Series([], dtype="float64")
-        xm = _stack_rows(xs)
-        ym = _stack_rows(ys)
-        acc = np.zeros(len(xm), dtype=np.float64)
-        for i in range(xm.shape[1]):
-            # column-wise cast: exact (f32->f64 is lossless) and cache
-            # resident; the fold order over dimensions is unchanged
-            acc += xm[:, i].astype(np.float64) * ym[:, i].astype(np.float64)
-        return pd.Series(acc)
-
-    return _dot(a, b)
 
 
 def norm(a: Column) -> Column:
@@ -571,21 +520,15 @@ def assign_cells(
     id_col: str,
     vec_col: str,
     n: int,
-    fan_out: bool = True,
 ) -> DataFrame:
     """Assign every vector to its ``n`` nearest cells: map-side broadcast
     cross join against the L-row cell table, then a window PARTITIONED BY
     vector id (keyed — no global state). Rounded cosines + label
     tie-break keep the assignment engine-portable.
 
-    With ``fan_out`` (the CORPUS side) the vector side repartitions
-    first: the |side| x L cosine scoring is the expensive map
-    (higher-order-function dot products are interpreted, not
-    codegen'd), and a single-split scan would run it all on one core
-    (measured 7s single-task at sf0.1).  Pass ``fan_out=False`` for a
-    small QUERY side — a handful of probe rows gains nothing from a
-    repartition exchange and the plan walk it costs."""
-    side = ensure_parallelism(side) if fan_out else side
+    Sized for a small QUERY side: a handful of probe rows gains nothing
+    from a repartition exchange, so the side is scored as it arrives.
+    A corpus-sized side goes through :func:`assign_cells_fast`."""
     sn = with_norm(side, id_col, vec_col)
     scored = sn.crossJoin(F.broadcast(cells)).select(
         "id",
@@ -1115,8 +1058,7 @@ def ivf_topk_deterministic(
     queries = queries.where(F.col(vec_col).isNotNull())
     cells = label_cells(corpus, vec_col, label_col)
     assign = assign_cells_fast(corpus, cells, id_col, vec_col, 1)
-    # query side: a few probe rows — skip the fan-out repartition
-    probes = assign_cells(queries, cells, id_col, vec_col, n_probe, fan_out=False)
+    probes = assign_cells(queries, cells, id_col, vec_col, n_probe)
     qv = with_norm(queries, id_col, vec_col).alias("q")
     cv = with_norm(corpus, id_col, vec_col).alias("c")
     cand = (

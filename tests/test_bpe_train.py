@@ -111,11 +111,11 @@ def test_checkpoint_chain_releases_and_matches(spark):
     docs = spark.createDataFrame(
         [(" ".join([w] * c),) for w, c in freq.items()], "text string"
     )
-    base = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+    base = _persistent_rdd_ids(spark)
     a = [tuple(r) for r in bpe_train(docs, "text", 6, checkpoint_every=2).collect()]
     b = [tuple(r) for r in bpe_train(docs, "text", 6, checkpoint_every=16).collect()]
     assert a == b == _py_bpe(freq, 6)
-    assert spark.sparkContext._jsc.sc().getPersistentRDDs().size() <= base
+    assert not (_persistent_rdd_ids(spark) - base)
 
 
 def test_caller_checkpoint_input_survives(spark):

@@ -134,3 +134,24 @@ def test_copurchase_edges_match_self_join(spark):
         )
         got = copurchase_edges(df, "g", "item", min_groups=mg)
         assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect())), mg
+
+
+def _deg_narrowed(df) -> bool:
+    return re.search(
+        r"cast\(deg#\d+L as int\)", df._jdf.queryExecution().analyzed().toString()
+    ) is not None
+
+
+def test_pagerank_forced_broadcast_keeps_bigint_deg(spark):
+    """The int32 ``deg`` narrowing rests on the |V| probe: a caller who
+    forces ``broadcast_ranks=True`` skips the probe, so ``deg`` on the
+    edge relation stays a bigint.  The probed broadcast regime (dense
+    graph) still narrows it."""
+    forced = pagerank(_edges(spark), iterations=2, persist_each=False, broadcast_ranks=True)
+    assert not _deg_narrowed(forced)
+    k10 = [(i, j) for i in range(1, 11) for j in range(i + 1, 11)]
+    probed = pagerank(
+        spark.createDataFrame(k10, "a long, b long"), iterations=2, persist_each=False
+    )
+    assert _deg_narrowed(probed)
+    assert dict(forced.dtypes)["deg"] == "bigint"

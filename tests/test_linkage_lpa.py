@@ -13,6 +13,8 @@ from erddap2agol_spark.operators.linkage import (
     value_dictionary,
 )
 
+from .test_opt_r09 import _persistent_rdd_ids
+
 
 def _first_tok_block():
     return F.split_part(F.col("value"), F.lit(" "), F.lit(1))
@@ -109,13 +111,12 @@ def test_lpa_unpersists_scaffolding(spark):
     from erddap2agol_spark.operators.dedup import release_checkpoints
 
     edges = spark.createDataFrame([(1, 2), (2, 3)], "a int, b int")
-    before = len(spark.sparkContext._jsc.getPersistentRDDs())
+    base = _persistent_rdd_ids(spark)
     out = label_propagation(edges, iterations=2)
     # r9: the returned frame is checkpoint-backed (persist would be
     # CacheManager-pinned and never GC-reclaimed) — release explicitly
     release_checkpoints(out)
-    after = len(spark.sparkContext._jsc.getPersistentRDDs())
-    assert after <= before
+    assert not (_persistent_rdd_ids(spark) - base)
 
 
 class TestPointerDoubling:

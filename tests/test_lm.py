@@ -53,14 +53,17 @@ def test_bigram_model_counts(spark, tiny_docs):
 
 def test_cross_entropy_hand_computed(spark, tiny_docs):
     # k=0.5, V=3: p(b|a) = (3+.5)/(3+1.5) = 7/9 ; p(a|b) = (1+.5)/(1+1.5) = 3/5
-    out = {
-        r.id: (r.n_bigrams, r.cross_entropy)
-        for r in bigram_cross_entropy(tiny_docs, "id", "text", k=0.5).collect()
-    }
     lp_ab, lp_ba = math.log(7 / 9), math.log(3 / 5)
-    assert out[2] == (1, pytest.approx(-lp_ab))
-    assert out[1] == (3, pytest.approx(-(2 * lp_ab + lp_ba) / 3))
-    assert 3 not in out  # no bigrams -> not scored
+    for extra_cols in [(), ("lang",)]:
+        rows = bigram_cross_entropy(
+            tiny_docs, "id", "text", k=0.5, extra_cols=extra_cols
+        ).collect()
+        out = {r.id: (r.n_bigrams, r.cross_entropy) for r in rows}
+        assert out[2] == (1, pytest.approx(-lp_ab))
+        assert out[1] == (3, pytest.approx(-(2 * lp_ab + lp_ba) / 3))
+        assert 3 not in out  # no bigrams -> not scored
+        if extra_cols:  # carried through per document
+            assert {r.id: r.lang for r in rows} == {1: "x", 2: "x"}
 
 
 def test_cross_entropy_ranks_mash_above_boilerplate(spark):
@@ -107,28 +110,3 @@ def test_lm_plans_are_scale_shaped(spark, tiny_docs):
     assert "CartesianProduct" not in bpe
     # the only nested-loop joins allowed are the one-row merge scalar
     assert bpe.count("BroadcastNestedLoopJoin") <= 3
-
-
-def test_cross_entropy_agg_matches_two_pass(spark, tiny_docs):
-    """The single-scan twin (one corpus-sized exchange, model derived
-    from the per-(doc,pair) aggregate) must produce the SAME scores as
-    the two-pass plan — including the 1-token doc dropping out and the
-    vocabulary counting doc-final-only tokens via the NULL-padded zip."""
-    from erddap2agol_spark.operators.dedup import release_checkpoints
-    from erddap2agol_spark.operators.lm import bigram_cross_entropy_agg
-
-    two = {
-        r.id: (r.n_bigrams, round(r.cross_entropy, 9))
-        for r in bigram_cross_entropy(
-            tiny_docs, "id", "text", extra_cols=("lang",)
-        ).collect()
-    }
-    agg_df = bigram_cross_entropy_agg(
-        tiny_docs, "id", "text", extra_cols=("lang",)
-    )
-    one = {
-        r.id: (r.n_bigrams, round(r.cross_entropy, 9))
-        for r in agg_df.collect()
-    }
-    assert one == two and 3 not in one  # single-token doc emits nothing
-    release_checkpoints(agg_df)

@@ -21,10 +21,6 @@ from erddap2agol_spark.sources.tables import load_table
 SF = "/root/testdata/sf0.001"
 
 
-def _persistent_rdd_count(spark) -> int:
-    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-
 def _persistent_rdd_ids(spark) -> set[int]:
     """Ids (not just the count) of persistent RDDs: a prior test's
     checkpoint may be reclaimed by the async ContextCleaner WHILE this
@@ -215,7 +211,7 @@ def test_jaccard_auto_shared_probe_matches_posting_join(spark):
     )
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
-    base = _persistent_rdd_count(spark)
+    base = _persistent_rdd_ids(spark)
     auto = jaccard_pairs_auto(docs, "doc_id", "text", shingle_n=3, threshold=0.5)
     ref = ngram_jaccard_pairs(docs, "doc_id", "text", shingle_n=3, threshold=0.5)
     a = {tuple(r) for r in auto.collect()}
@@ -226,5 +222,5 @@ def test_jaccard_auto_shared_probe_matches_posting_join(spark):
     )
     release_checkpoints(auto)
     release_checkpoints(ref)
-    assert _persistent_rdd_count(spark) <= base
+    assert not (_persistent_rdd_ids(spark) - base)
     gc.collect()

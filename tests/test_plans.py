@@ -530,7 +530,7 @@ NESTED_LOOP_JUSTIFIED = {
     "hll_distinct_users",  # 1-row register fold
     "key_hotness",
     "lm_perplexity",  # 1-row vocabulary-size scalar
-    "lm_perplexity_agg",  # same 1-row vocabulary scalar, single-scan twin
+    "lm_perplexity_agg",  # lm_perplexity under a second name
     "lm_quality_gate",  # same LM scorer: 1-row vocabulary-size scalar
     "mix_summary",  # 1-row normalizer
     "nrt_window",  # 1-row max-timestamp scalar

@@ -10,6 +10,8 @@ from erddap2agol_spark.operators.sampling import shuffle_order
 from erddap2agol_spark.operators.spatial import zorder_key
 from erddap2agol_spark.operators.text import bloom_contamination
 
+from .test_opt_r09 import _persistent_rdd_ids
+
 
 def test_pagerank_empty_edges(spark):
     edges = spark.createDataFrame([], "a long, b long")
@@ -258,7 +260,7 @@ class TestSparseCosine:
 
         from erddap2agol_spark.operators.dedup import release_checkpoints
 
-        before = len(spark.sparkContext._jsc.getPersistentRDDs())
+        base = _persistent_rdd_ids(spark)
         out = sparse_cosine_pairs(
             spark.createDataFrame([(1, "a b c d"), (2, "a b c e")], "doc_id int, text string"),
             "doc_id",
@@ -268,8 +270,7 @@ class TestSparseCosine:
         # r9: the result is checkpoint-backed (releasable), not a
         # CacheManager-pinned persist (which GC never reclaims)
         release_checkpoints(out)
-        after = len(spark.sparkContext._jsc.getPersistentRDDs())
-        assert after <= before
+        assert not (_persistent_rdd_ids(spark) - base)
 
 
 class TestJaccardPrefixFilter:

@@ -14,6 +14,8 @@ from erddap2agol_spark.operators.windows import grouped_row_number
 from erddap2agol_spark.queries.curation_queries import build_corpus_manifest
 from erddap2agol_spark.sources.tables import load_table
 
+from .test_opt_r09 import _persistent_rdd_ids
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -63,10 +65,6 @@ def test_corpus_manifest_derived_shards(spark):
     assert n_shards_seen > 8
 
 
-def _persistent_rdd_count(spark) -> int:
-    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
-
-
 def test_iterative_rounds_release_previous(spark):
     """Each connected-components round must free the previous round's
     checkpoint explicitly (truncate_lineage release chaining): after
@@ -77,7 +75,7 @@ def test_iterative_rounds_release_previous(spark):
         release_checkpoints,
     )
 
-    base = _persistent_rdd_count(spark)
+    base = _persistent_rdd_ids(spark)
     # two chains + an isolated pair: converges in a few rounds
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21)],
@@ -86,12 +84,10 @@ def test_iterative_rounds_release_previous(spark):
     comp = connected_components(edges, "a", "b", max_iter=8)
     got = {r.node: r.component for r in comp.collect()}
     assert got[4] == got[1] and got[12] == got[10] and got[21] == got[20]
-    in_flight = _persistent_rdd_count(spark)
-    assert in_flight <= base + 2, (
-        f"round checkpoints accumulated: {base} -> {in_flight}"
-    )
+    in_flight = _persistent_rdd_ids(spark) - base
+    assert len(in_flight) <= 2, f"round checkpoints accumulated: {in_flight}"
     release_checkpoints(comp)
-    assert _persistent_rdd_count(spark) <= base
+    assert not (_persistent_rdd_ids(spark) - base)
 
 
 def test_near_dup_repeated_calls_reclaim_blocks(spark):
@@ -101,13 +97,13 @@ def test_near_dup_repeated_calls_reclaim_blocks(spark):
     the py4j finalizer removes the JVM Dataset binding but the
     checkpointed RDD stays strongly rooted), so the contract is the
     EXPLICIT one: dedup.release_checkpoints(result) after consuming
-    each result returns the persistent-RDD table to its pre-call level
-    — >=3 sequential calls, zero net growth."""
+    each result leaves none of the call's persistent RDDs behind — >=3
+    sequential calls, no new id surviving any of them."""
     from erddap2agol_spark.operators.dedup import release_checkpoints
     from erddap2agol_spark.operators.similarity import cell_near_dup_pairs
 
     emb = load_table(spark, SF, "embeddings").withColumn("one_cell", F.lit(0))
-    base = _persistent_rdd_count(spark)
+    base = _persistent_rdd_ids(spark)
     rows_per_call = []
     for _ in range(3):
         df = cell_near_dup_pairs(
@@ -128,12 +124,12 @@ def test_near_dup_repeated_calls_reclaim_blocks(spark):
         # dependent: truncate_lineage takes a RELIABLE checkpoint when
         # any earlier test left a checkpoint dir on the shared session,
         # and reliable checkpoints never appear in getPersistentRDDs.
-        # The invariant under test is zero NET growth + a releasable
-        # result, asserted below for either checkpoint mode.
-        assert _persistent_rdd_count(spark) <= base, (
-            "release_checkpoints left blocks behind: "
-            f"{base} -> {_persistent_rdd_count(spark)}"
-        )
+        # The invariant under test is that no id this call created
+        # survives the release, asserted below for either checkpoint
+        # mode (an id set, not a count: another test's entries may be
+        # reclaimed concurrently).
+        left = _persistent_rdd_ids(spark) - base
+        assert not left, f"release_checkpoints left blocks behind: {left}"
     assert len(set(rows_per_call)) == 1, "repeated calls diverged"
     gc.collect()  # drop any lingering python-side refs before other tests
 
@@ -152,14 +148,13 @@ def test_dedup_pipeline_cache_hygiene(spark):
     )
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
-    base = _persistent_rdd_count(spark)
+    base = _persistent_rdd_ids(spark)
     pairs = ngram_jaccard_pairs(docs, "doc_id", "text", shingle_n=3, threshold=0.5)
     comp = connected_components(pairs, release_input=True)
     assert comp.count() > 0
     release_checkpoints(comp)
-    assert _persistent_rdd_count(spark) <= base, (
-        f"dedup pipeline leaked storage: {base} -> {_persistent_rdd_count(spark)}"
-    )
+    left = _persistent_rdd_ids(spark) - base
+    assert not left, f"dedup pipeline leaked storage: {left}"
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), (
         "a CacheManager-pinned persist survived the pipeline"
     )

@@ -393,7 +393,8 @@ def test_weighted_topk_edge_cases(spark):
 
 
 def test_stack_rows_zero_copy_and_fallback():
-    """_stack_rows (the dot_arrow seam): shared-buffer views reconstruct
+    """_stack_rows (the Arrow-batch matrix seam of assign_cells_fast and
+    cell_near_dup_pairs): shared-buffer views reconstruct
     zero-copy; ragged or detached rows fall back to vstack with the same
     values."""
     import numpy as np
@@ -430,22 +431,6 @@ def test_stack_rows_heterogeneous_rows_fall_back(spark):
     rows[5] = list(rows[5])  # heterogeneous: a plain-list row
     m = _stack_rows(pd.Series(rows, dtype=object))
     np.testing.assert_array_equal(m, flat.reshape(n, d))
-
-
-def test_dot_arrow_bit_identical_to_fold(spark):
-    """dot_arrow must equal the interpreted fold BIT-for-bit (no
-    rounding slack): same values through both the zero-copy batch path
-    and the JVM higher-order-function path."""
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").limit(200)
-    a = emb.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("va"))
-    b = emb.select((F.col("vec_id")).alias("ib"), F.col("embedding").alias("vb"))
-    pairs = a.join(b, F.col("ia") < F.col("ib")).limit(5000)
-    both = pairs.select(
-        similarity.dot(F.col("va"), F.col("vb")).alias("fold"),
-        similarity.dot_arrow(F.col("va"), F.col("vb")).alias("arrow"),
-    )
-    assert both.filter(F.col("fold") != F.col("arrow")).count() == 0
-    assert both.count() > 0
 
 
 def test_stack_rows_rejects_permuted_views():

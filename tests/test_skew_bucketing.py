@@ -205,9 +205,6 @@ def test_dedup_pair_builders_release_scaffolding(spark):
 
     docs = load_table(spark, SF, "documents").limit(200)
 
-    def n_persisted():
-        return spark.sparkContext._jsc.getPersistentRDDs().size()
-
     def rdd_ids():
         it = spark.sparkContext._jsc.getPersistentRDDs().keySet().iterator()
         out = set()

@@ -2,12 +2,6 @@
 
 from __future__ import annotations
 
-import os
-import time
-
-import pytest
-from pyspark.sql import functions as F
-
 from erddap2agol_spark.streaming import stateful
 
 
@@ -81,12 +75,10 @@ def test_running_max_across_batches(spark, tmp_path):
 
 
 def test_stuck_run_alerts_across_batches(spark, tmp_path):
-    """transformWithStateInPandas: run-length state survives microbatch
-    boundaries, alerts fire once per run, value change resets the latch."""
-    from erddap2agol_spark.streaming import tws
-
-    src = str(tmp_path / "src_tws")
-    ckpt = str(tmp_path / "ckpt_tws")
+    """Run-length state survives microbatch boundaries, alerts fire
+    once per run, value change resets the latch."""
+    src = str(tmp_path / "src_stuck")
+    ckpt = str(tmp_path / "ckpt_stuck")
     # batch 1: key 1 reports 5.0 twice (run=2, below threshold);
     #          key 2 varies
     spark.createDataFrame(
@@ -95,17 +87,17 @@ def test_stuck_run_alerts_across_batches(spark, tmp_path):
     ).coalesce(1).write.mode("append").parquet(src)
 
     stream = spark.readStream.schema("k bigint, seq bigint, v double").parquet(src)
-    out = tws.stuck_run_alerts(stream, "k", "v", "seq", min_run=3)
+    out = stateful.stuck_run_alerts(stream, "k", "v", "seq", min_run=3)
     q = (
         out.writeStream.outputMode("append")
         .format("memory")
-        .queryName("tws_out")
+        .queryName("stuck_out")
         .option("checkpointLocation", ckpt)
         .start()
     )
     try:
         q.processAllAvailable()
-        assert spark.sql("SELECT * FROM tws_out").count() == 0  # run=2 only
+        assert spark.sql("SELECT * FROM stuck_out").count() == 0  # run=2 only
 
         # batch 2: key 1 continues 5.0 -> run crosses 3 HERE (state
         # carried across batches); then keeps reporting 5.0 (no re-alert),
@@ -116,7 +108,7 @@ def test_stuck_run_alerts_across_batches(spark, tmp_path):
         ).coalesce(1).write.mode("append").parquet(src)
         q.processAllAvailable()
         rows = sorted(
-            spark.sql("SELECT * FROM tws_out").collect(),
+            spark.sql("SELECT * FROM stuck_out").collect(),
             key=lambda r: (r.k, r.stuck_value),
         )
         assert [(r.k, r.stuck_value, r.run_len) for r in rows] == [
@@ -128,7 +120,7 @@ def test_stuck_run_alerts_across_batches(spark, tmp_path):
 
 
 def test_advance_run_state_machine_pure():
-    from erddap2agol_spark.streaming.tws import advance_run_state, _EMPTY
+    from erddap2agol_spark.streaming.stateful import _EMPTY, advance_run_state
 
     st, alerts = advance_run_state(_EMPTY, [5.0, 5.0], 3)
     assert st == (5.0, 2, False) and alerts == []
@@ -140,22 +132,13 @@ def test_advance_run_state_machine_pure():
     assert st == (7.0, 4, True) and alerts == [(7.0, 3)]
 
 
-def test_stuck_run_engine_gating(spark):
-    from erddap2agol_spark.streaming import tws
-
+def test_stuck_run_plan_schema(spark):
+    """The detector builds a streaming plan without starting a query."""
     stream = (
         spark.readStream.format("rate").option("rowsPerSecond", 1).load()
         .selectExpr("value AS k", "value AS seq", "CAST(value AS DOUBLE) AS v")
     )
-    # ttl needs the tws engine
-    with pytest.raises(ValueError, match="TTL"):
-        tws.stuck_run_alerts(stream, "k", "v", "seq", ttl_ms=1000, engine="apws")
-    with pytest.raises(ValueError, match="unknown engine"):
-        tws.stuck_run_alerts(stream, "k", "v", "seq", engine="bogus")
-    # this container ships a broken protobuf -> auto resolves to apws;
-    # if protobuf ever appears, auto must still build a plan (both paths
-    # return a streaming DataFrame without starting a query)
-    df = tws.stuck_run_alerts(stream, "k", "v", "seq")
+    df = stateful.stuck_run_alerts(stream, "k", "v", "seq")
     assert df.isStreaming and [f.name for f in df.schema.fields] == [
         "k", "stuck_value", "run_len",
     ]

@@ -45,6 +45,14 @@ duplication differs:
 
 Diagnostic only (not a graded artifact).  Writes scaled dirs under
 /tmp/spark_graft_scale/, symlinking the unscaled tables.
+
+Usage:
+
+  python tools/scale_curve.py [MULT ...]
+
+MULT is a positive integer row multiplier (default: 1 4 16 64).
+``SCALE_CURVE_FAMILIES`` (docs,events,embiso,graph) and
+``SCALE_CURVE_QUERIES`` (comma list) narrow the plan.
 """
 
 from __future__ import annotations
@@ -92,9 +100,6 @@ LINEAR_QUERIES = [
     "vocab_coverage",
     "quality_linear_classifier",
     "source_shingle_overlap",
-    # round 9: the single-scan LM twin (one corpus-sized exchange keyed
-    # on the doc-id-leading triple)
-    "lm_perplexity_agg",
     # round 9: the BPE tokenizer lifecycle — ONE corpus-sized aggregate
     # (the word-frequency table), then per-round work on the VOCABULARY
     # only; on the salted linear corpus the vocabulary is ~fixed, so
@@ -401,14 +406,28 @@ def time_query(spec, spark, sf_dir: str) -> tuple[float, int]:
     return best, rows
 
 
+def _parse_mults(args: list[str]) -> list[int]:
+    """Sorted distinct multipliers (the alpha fit takes the two LARGEST);
+    usage and exit 2 on anything but positive integers (``--help`` too)."""
+    try:
+        mults = sorted({int(a) for a in args})
+        if mults and mults[0] < 1:
+            raise ValueError(mults[0])
+    except ValueError:
+        print(__doc__, file=sys.stderr)
+        sys.exit(2)
+    return mults or list(MULTS)
+
+
 def main() -> None:
+    # before any import that could start the JVM
+    mults = _parse_mults(sys.argv[1:])
+
     from erddap2agol_spark.queries import REGISTRY, _load_all
     from erddap2agol_spark.session import get_spark
 
     _load_all()
     spark = get_spark(app_name="scale_curve")
-    # sorted: the alpha fit takes the two LARGEST multipliers
-    mults = sorted({int(m) for m in sys.argv[1:]}) or list(MULTS)
 
     families = os.environ.get("SCALE_CURVE_FAMILIES", "docs,events").split(",")
 
