@@ -55,7 +55,6 @@ HEADLINE = [
     "q21_late_sole_suppliers",
     # round 4: corpus-LM scoring (train + apply in one plan) and LPA
     "lm_perplexity",
-    "lm_perplexity_agg",
     "label_prop_communities",
     # round 4 close: the warehouse temporal join (window as-of form —
     # its oracle is the validity-range theta join DuckDB must execute)
@@ -80,6 +79,8 @@ HEADLINE = [
 # the degenerate-quantizer split path).  Both are driver-graded via the
 # registry window; timing them here would skew the throughput ratio
 # with fixed wire/fixture costs, not engine speed.
+# lm_perplexity_agg returns lm_perplexity's plan, so the headline times
+# that plan once, under lm_perplexity.
 
 
 def main() -> None:

@@ -53,18 +53,3 @@ def gate_stats(obs: Observation) -> dict:
         "drop_rate": round((rows_in - kept) / rows_in, 6) if rows_in else 0.0,
     }
 
-
-def observed_gate_stream(
-    df: DataFrame, keep: Column, stage: str
-) -> DataFrame:
-    """Streaming form of :func:`observed_gate`: the named-observation
-    variant (``df.observe(name, ...)``) — per-micro-batch counters
-    surface in every ``StreamingQueryProgress.observedMetrics[stage]``,
-    so the gate reports its drop rate batch by batch with zero extra
-    passes. Read them from ``query.lastProgress`` / a listener."""
-    observed = df.observe(
-        stage,
-        F.count(F.lit(1)).alias("rows_in"),
-        F.sum(F.when(keep, 1).otherwise(0)).alias("rows_kept"),
-    )
-    return observed.filter(keep)

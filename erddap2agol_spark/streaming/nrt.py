@@ -18,9 +18,6 @@ Spark-first translation:
   cluster this is exactly what Delta/Iceberg commits do; the pointer
   pattern needs no extra dependency and keeps the observable contract
   testable (SURVEY §7.4).
-- Structured Streaming (:func:`windowed_counts_stream`) covers the
-  continuous form: watermark + tumbling window over the same event
-  schema (ST1/ST5 late-data handling).
 
 State is tiny (one timestamp/hash per dataset) but keyed, so the same
 pattern scales to millions of datasets as a state table.
@@ -294,161 +291,3 @@ def refresh_many(
     with ThreadPoolExecutor(max_workers=max_workers) as pool:
         return dict(pool.map(one, datasets.items()))
 
-
-# ---------------------------------------------------------------------------
-# Structured Streaming form (ST1/ST5)
-# ---------------------------------------------------------------------------
-
-
-def _ltz_event_time(df, ts_col: str):
-    """Watermarks require TIMESTAMP (LTZ); parquet sources written with
-    plain timestamp[us] read back as TIMESTAMP_NTZ under Spark 4's NTZ
-    inference. The session tz is pinned UTC (session.get_spark), so the
-    cast is a deterministic naive-as-UTC reinterpretation."""
-    from pyspark.sql.types import TimestampNTZType
-
-    if isinstance(df.schema[ts_col].dataType, TimestampNTZType):
-        df = df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return df
-
-
-def windowed_counts_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    window: str = "1 day",
-    watermark: str = "1 hour",
-):
-    """readStream -> watermark -> tumbling-window counts. The watermark
-    bounds state for late data (ST5); callers attach a sink
-    (memory sink in tests, foreachBatch(atomic_overwrite) in production).
-    """
-    events = _ltz_event_time(
-        spark.readStream.schema(schema).parquet(source_dir), ts_col
-    )
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(F.window(F.col(ts_col), window).alias("w"), F.col(key_col))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("w.start").alias("bucket_start"),
-            key_col,
-            "n",
-        )
-    )
-
-
-def session_counts_stream(
-    spark: SparkSession,
-    source_dir: str,
-    schema,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-):
-    """readStream -> watermark -> native SESSION windows (gap-merged per
-    key) — the streaming twin of the batch ``sessionization`` query, but
-    incremental: Spark's session-window state merges overlapping windows
-    per key in the state store, the watermark closes and evicts sessions
-    whose gap has provably passed (bounded state at any corpus rate).
-    Callers attach a sink; append mode emits only closed sessions.
-    """
-    events = _ltz_event_time(
-        spark.readStream.schema(schema).parquet(source_dir), ts_col
-    )
-    return (
-        events.withWatermark(ts_col, watermark)
-        .groupBy(
-            F.session_window(F.col(ts_col), gap).alias("w"), F.col(key_col)
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            key_col,
-            "n_events",
-        )
-    )
-
-
-def enriched_stream(
-    spark,
-    source_dir: str,
-    schema,
-    dim_df,
-    key: str,
-    ts_col: str = "ts",
-):
-    """Stream-static enrichment: each micro-batch of the file stream
-    joins the (small, broadcastable) static dimension on ``key`` —
-    Spark re-plans the join per batch, so a dim refreshed between
-    batches (e.g. the reference's catalog/date-cache, re-read each NRT
-    cycle) is picked up without restarting the query. The stream side
-    never shuffles for the join; state is zero (no watermark needed for
-    inner stream-static)."""
-    events = _ltz_event_time(
-        spark.readStream.schema(schema).parquet(source_dir), ts_col
-    )
-    return events.join(F.broadcast(dim_df), key)
-
-
-def deduped_stream(
-    spark,
-    source_dir: str,
-    schema,
-    key_cols,
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-):
-    """Streaming exact dedup with bounded state:
-    ``dropDuplicatesWithinWatermark`` keeps each key's fingerprint only
-    until the watermark passes it, so state size is O(keys per
-    watermark window), not O(all keys ever) — the streaming face of
-    U2/F16 (dedup-on-add + content fingerprint gate).  A duplicate
-    arriving within the watermark of its first occurrence is dropped
-    even when the two copies land in different micro-batches.
-    """
-    events = _ltz_event_time(
-        spark.readStream.schema(schema).parquet(source_dir), ts_col
-    )
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        list(key_cols)
-    )
-
-
-def stream_stream_join(
-    spark,
-    left_dir: str,
-    right_dir: str,
-    schema,
-    key: str,
-    ts_col: str = "ts",
-    watermark: str = "2 hours",
-    max_lag: str = "1 hour",
-):
-    """Watermarked stream-stream inner join: both sides buffer only
-    rows younger than the watermark, and the time-bound residual
-    (right within ``max_lag`` AFTER left) lets Spark evict state as
-    event time advances — the unbounded-state stream join is exactly
-    the anti-pattern this refuses to build.  Output columns:
-    left ``(key, ts)`` plus the right row's timestamp as ``r_ts``.
-    """
-    lhs = _ltz_event_time(
-        spark.readStream.schema(schema).parquet(left_dir), ts_col
-    ).select(F.col(key), F.col(ts_col))
-    rhs = _ltz_event_time(
-        spark.readStream.schema(schema).parquet(right_dir), ts_col
-    ).select(F.col(key).alias("r_key"), F.col(ts_col).alias("r_ts"))
-    return (
-        lhs.withWatermark(ts_col, watermark)
-        .join(
-            rhs.withWatermark("r_ts", watermark),
-            (F.col(key) == F.col("r_key"))
-            & (F.col("r_ts") >= F.col(ts_col))
-            & (F.col("r_ts") <= F.col(ts_col) + F.expr(f"INTERVAL {max_lag}")),
-        )
-        .drop("r_key")
-    )

@@ -34,3 +34,46 @@ def test_bad_runs_value_exits_with_usage(monkeypatch, capsys, argv):
         _load_tool().main()
     assert exc.value.code == 2
     assert "Usage" in capsys.readouterr().err
+
+
+def test_every_query_warms_once_before_any_timed_run(monkeypatch):
+    """Each spec runs N + 1 times: all warm-up runs come before the first
+    clock read, and N times are reported per query."""
+    mod = _load_tool()
+    log: list[str] = []
+
+    class _Clock:
+        @staticmethod
+        def time():
+            log.append("clock")
+            return float(len(log))
+
+    class _Frame:
+        def __init__(self, name):
+            self.name = name
+
+        def count(self):
+            log.append(f"count:{self.name}")
+            return 0
+
+    class _Spec:
+        def __init__(self, name):
+            self.name = name
+
+        def spark(self, spark, sf_dir):
+            assert sf_dir == "/sf"
+            log.append(f"build:{self.name}")
+            return _Frame(self.name)
+
+    monkeypatch.setattr(mod, "time", _Clock)
+    specs = {n: _Spec(n) for n in ("q_a", "q_b")}
+    n_runs = 3
+    out = mod.time_queries(None, specs, "/sf", n_runs)
+
+    assert {n: len(t) for n, t in out.items()} == {"q_a": n_runs, "q_b": n_runs}
+    builds = [e for e in log if e.startswith("build:")]
+    assert [builds.count(f"build:{n}") for n in specs] == [n_runs + 1] * 2
+    first_clock = log.index("clock")
+    assert log[:first_clock] == [
+        "build:q_a", "count:q_a", "build:q_b", "count:q_b"
+    ]

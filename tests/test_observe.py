@@ -49,35 +49,3 @@ def test_gate_on_quality_pipeline(spark):
     assert s["rows_kept"] == n
     assert 0.0 <= s["drop_rate"] <= 1.0
 
-
-def test_streaming_gate_metrics_per_batch(spark, tmp_path):
-    from erddap2agol_spark.plans.observe import observed_gate_stream
-
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    spark.createDataFrame(
-        [(i, float(i)) for i in range(10)], "id long, v double"
-    ).coalesce(1).write.mode("append").parquet(src)
-
-    stream = spark.readStream.schema("id long, v double").parquet(src)
-    gated = observed_gate_stream(stream, F.col("v") >= 5.0, "gate")
-    q = (
-        gated.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("obs_gate_out")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        assert spark.sql("SELECT * FROM obs_gate_out").count() == 5
-        metrics = None
-        for p in reversed(q.recentProgress):
-            om = p.get("observedMetrics") if isinstance(p, dict) else p["observedMetrics"]
-            if om and "gate" in om:
-                metrics = om["gate"]
-                break
-        assert metrics is not None
-        assert (metrics["rows_in"], metrics["rows_kept"]) == (10, 5)
-    finally:
-        q.stop()

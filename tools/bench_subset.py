@@ -1,9 +1,16 @@
 #!/usr/bin/env python
-"""bench.py semantics (same session config, same warmup, same timed
-action, best-of-<=3 with the 5% early stop) for a SUBSET of queries —
-the A/B loop tool.  Usage:
+"""Time a SUBSET of registry queries in one session — the A/B loop tool.
+Usage:
 
   SPARK_GRAFT_CPUS=32 python tools/bench_subset.py q1 q2 ... [--runs N]
+
+Same session and table warm-up as bench.py, then every named query runs
+once untimed (its checkpoints released), so no query's timed runs carry
+its cold JIT and codegen and the result does not depend on query order.
+Then each query runs N times (default 3) in the order given, every run
+timed as ``spec.spark()`` + ``count()`` with its checkpoints released
+after the clock stops.  Prints one JSON line with the loadavg and all N
+times per query; take the median or minimum yourself.
 """
 
 from __future__ import annotations
@@ -12,6 +19,30 @@ import json
 import os
 import sys
 import time
+
+
+def time_queries(
+    spark, specs: dict, sf_dir: str, n_runs: int
+) -> dict[str, list[float]]:
+    """One untimed warm-up run of every spec in ``specs`` (name -> spec),
+    then ``n_runs`` timed runs per spec; returns name -> run seconds."""
+    from erddap2agol_spark.operators.dedup import release_checkpoints
+
+    for spec in specs.values():
+        df = spec.spark(spark, sf_dir)
+        df.count()
+        release_checkpoints(df)
+    out: dict[str, list[float]] = {}
+    for name, spec in specs.items():
+        runs = []
+        for _ in range(n_runs):
+            t0 = time.time()
+            df = spec.spark(spark, sf_dir)
+            df.count()
+            runs.append(round(time.time() - t0, 3))
+            release_checkpoints(df)
+        out[name] = runs
+    return out
 
 
 def main() -> None:
@@ -31,7 +62,6 @@ def main() -> None:
     names = [a for a in argv if not a.startswith("--")]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    from erddap2agol_spark.operators.dedup import release_checkpoints
     from erddap2agol_spark.queries import REGISTRY, _load_all
     from erddap2agol_spark.session import get_spark
 
@@ -43,17 +73,7 @@ def main() -> None:
         load_table(spark, sf_dir, t).schema
     load_table(spark, sf_dir, "region").groupBy("r_name").count().count()
 
-    out: dict[str, list[float]] = {}
-    for name in names:
-        spec = REGISTRY[name]
-        runs = []
-        for _ in range(n_runs):
-            t0 = time.time()
-            df = spec.spark(spark, sf_dir)
-            df.count()
-            runs.append(round(time.time() - t0, 3))
-            release_checkpoints(df)
-        out[name] = runs
+    out = time_queries(spark, {n: REGISTRY[n] for n in names}, sf_dir, n_runs)
     print(json.dumps({"loadavg": list(os.getloadavg()), "runs": out}))
     spark.stop()
 
