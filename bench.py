@@ -85,7 +85,7 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from erddap2agol_spark.operators.dedup import release_checkpoints
+    from erddap2agol_spark.plans.lifecycle import release_checkpoints
     from erddap2agol_spark.queries import REGISTRY, _load_all
     from erddap2agol_spark.session import get_spark
 
@@ -124,8 +124,7 @@ def main() -> None:
                 # AFTER the clock stops: free any checkpoint blocks the
                 # call left behind (ADVICE r9: a long bench session
                 # otherwise pins one scaffold per run per checkpointing
-                # query — GC never reclaims them under pinned-thread
-                # py4j).  Timed work is unchanged: every run above
+                # query; see plans.lifecycle).  Timed work is unchanged: every run above
                 # still computes from the parquet inputs, because a
                 # fresh call roots fresh checkpoints (no cross-run
                 # plan matching).

@@ -75,17 +75,16 @@ def cmd_list(args) -> int:
 
 
 def cmd_run(args) -> int:
+    from .plans.lifecycle import pinned
+
     reg = _registry()
     if args.query not in reg:
         print(f"unknown query {args.query!r}; see `list`", file=sys.stderr)
         return 2
     with _spark() as spark:
-        df = reg[args.query].spark(spark, args.sf_dir).persist()
-        try:
+        with pinned(reg[args.query].spark(spark, args.sf_dir)) as df:
             df.show(args.show, truncate=False)
             print(f"[{df.count()} rows]")  # reads the cache, no second run
-        finally:
-            df.unpersist()
     return 0
 
 

@@ -20,9 +20,11 @@ Scale notes (the 100 TB story):
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.lifecycle import pinned, release_checkpoints, truncate_lineage
 from ..plans.parallelism import (
     PAIR_JOIN_FANOUT_WEIGHT,
     VECTOR_FANOUT_WEIGHT,
@@ -38,89 +40,6 @@ from ..plans.parallelism import (
 #: boilerplate-skewed corpora that dispatch to 'prefix' the persist
 #: would materialize the largest relation of the pipeline for nothing.
 SHARED_EXPLODE_MAX_BYTES = 64 << 20
-
-
-def truncate_lineage(df: DataFrame, release: DataFrame | None = None) -> DataFrame:
-    """Materialize ``df`` and cut its lineage — the per-round discipline
-    for iterative operators (connected components, k-core, pointer
-    doubling), where chaining rounds over plain ``persist`` nests the
-    ANALYZED plan round-over-round and driver-side optimization grows
-    super-linearly (measured 1.3s -> 14s per round by round 5).
-
-    Mode is chosen by session configuration: with a checkpoint dir set
-    (``spark.sparkContext.setCheckpointDir`` — do this on a real
-    cluster) rounds use a RELIABLE checkpoint, whose files survive
-    executor loss.  Without one (local[n], tests) rounds use
-    ``localCheckpoint``: executor-local blocks with NO lineage left to
-    recompute from, so losing an executor mid-iteration fails the job —
-    acceptable single-node, not at 1000 executors.
-
-    Lifecycle is EXPLICIT, not GC-driven: under PySpark's default
-    pinned-thread mode (``PYSPARK_PIN_THREAD=true``) a dropped
-    checkpointed frame's blocks are NOT reclaimed — the py4j finalizer
-    removes the JVM Dataset binding, but the checkpointed RDD stays
-    strongly rooted JVM-side and ``getPersistentRDDs`` grows by one
-    entry per call until the application exits (measured r9 on Spark
-    4.1; with ``PYSPARK_PIN_THREAD=false`` the ContextCleaner does
-    reclaim).  Iterative operators therefore pass the PREVIOUS round's
-    frame as ``release``: once the new checkpoint has materialized
-    (eager), the previous round's blocks are unpersisted explicitly.
-    Callers holding a terminal checkpointed result free it with
-    :func:`release_checkpoints` when done."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        out = df.checkpoint(eager=True)
-    else:
-        # SERIALIZED blocks (MEMORY_AND_DISK; the Dataset default is
-        # the *_DESER object store): a deserialized UnsafeRow costs
-        # ~80 B/row in JVM object overhead for a 3-long row (measured
-        # r10: the 2.4M-row pagerank edge base checkpointed at 220 MB
-        # vs 28 MB cached columnar, and every downstream scan paid the
-        # bloat).
-        from pyspark import StorageLevel
-
-        out = df.localCheckpoint(
-            eager=True, storageLevel=StorageLevel.MEMORY_AND_DISK
-        )
-    if release is not None:
-        release_checkpoints(release)
-    return out
-
-
-def release_checkpoints(df: DataFrame) -> int:
-    """Explicitly unpersist every checkpointed relation embedded in
-    ``df``'s plan; returns how many were released.  Call ONLY when no
-    future action will read the frame — a local checkpoint has no
-    lineage left to recompute from, so a released frame cannot be
-    re-executed.
-
-    Walks the analyzed plan's leaves for ``LogicalRDD`` nodes (exactly
-    what :func:`truncate_lineage` produces) and unpersists each backing
-    RDD — ``unpersist`` on a never-persisted LogicalRDD (e.g. a
-    ``createDataFrame`` relation) is a harmless no-op.  Best-effort:
-    on backends without py4j plan access (Spark Connect) this quietly
-    releases nothing and the blocks live until application exit.
-
-    Scope note (ADVICE r9): this releases storage BLOCKS.  On a
-    cluster whose session has a RELIABLE checkpoint dir configured,
-    ``truncate_lineage`` writes checkpoint FILES there; those files
-    are the checkpoint-dir lifecycle (clean them with the dir, as with
-    shuffle/work dirs — Spark itself only removes them at context stop
-    when ``spark.cleaner.referenceTracking.cleanCheckpoints`` is on)."""
-    try:
-        leaves = df._jdf.queryExecution().analyzed().collectLeaves()
-    except Exception:
-        return 0
-    freed = 0
-    for i in range(leaves.size()):
-        leaf = leaves.apply(i)
-        try:
-            if leaf.getClass().getSimpleName() == "LogicalRDD":
-                leaf.rdd().unpersist(False)
-                freed += 1
-        except Exception:
-            pass
-    return freed
 
 
 def word_shingles(col: Column, n: int = 3) -> Column:
@@ -242,51 +161,48 @@ def lsh_candidate_pairs(
     Cache lifecycle (VERDICT r3 #3, pagerank pattern graph.py:142-146):
     the signature table is persisted only while this call materializes
     the pair result, then released before returning.  The RETURNED
-    DataFrame comes back persisted + computed — the one cache entry the
-    caller owns (``release_checkpoints(result)`` when done — the result is checkpoint-backed since r9; a plain ``unpersist`` is a no-op on it).
+    DataFrame is an eager checkpoint the caller owns
+    (``release_checkpoints(result)`` when done).
     """
     if n_perm % rows_per_band:
         raise ValueError("n_perm must be divisible by rows_per_band")
     sig = minhash_signatures(df, id_col, text_col, n_perm, shingle_n)
-    # the band self-join scans the signature table twice; persist it so the
+    # the band self-join scans the signature table twice; pin it so the
     # shingle explode + md5 pipeline runs once (signatures are tiny:
     # n_docs x n_perm hashes).
-    sig = sig.persist()
-    # no eager fill here, deliberately: the band self-join is a shuffle
-    # equi-join whose single exchange is reused (no async broadcast
-    # thread to race the cold cache — that pathology is specific to
-    # broadcast-subquery plans), and an eager count() measured +1.2 s
-    # steady-state per call at sf0.1 for zero benefit
-    bands = band_keys(sig, n_perm, rows_per_band)
-    cond = (
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.band_sig") == F.col("b.band_sig"))
-        & (F.col("a.doc") < F.col("b.doc"))
-    )
-    if n_salts > 1:
-        from .skew import deterministic_salt
-
-        a = bands.withColumn("__salt", deterministic_salt(F.col("doc"), n_salts))
-        b = bands.select(
-            "*",
-            F.explode(F.array(*[F.lit(i) for i in range(n_salts)])).alias("__salt"),
+    with pinned(sig):
+        # no eager fill here, deliberately: the band self-join is a shuffle
+        # equi-join whose single exchange is reused (no async broadcast
+        # thread to race the cold cache — that pathology is specific to
+        # broadcast-subquery plans), and an eager count() measured +1.2 s
+        # steady-state per call at sf0.1 for zero benefit
+        bands = band_keys(sig, n_perm, rows_per_band)
+        cond = (
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.band_sig") == F.col("b.band_sig"))
+            & (F.col("a.doc") < F.col("b.doc"))
         )
-        cond = cond & (F.col("a.__salt") == F.col("b.__salt"))
-        a, b = a.alias("a"), b.alias("b")
-    else:
-        a = bands.alias("a")
-        b = bands.alias("b")
-    out = (
-        a.join(b, cond)
-        .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
-        .distinct()
-    )
-    # eager checkpoint, not persist: one action fills it (reading sig's
-    # cache twice), and unlike a CacheManager-pinned persist the blocks
-    # are releasable (release_checkpoints) instead of leaking per call
-    # (r9 finding; see truncate_lineage)
-    out = truncate_lineage(out)
-    sig.unpersist(True)  # blocking, so storage state is deterministic
+        if n_salts > 1:
+            from .skew import deterministic_salt
+
+            a = bands.withColumn("__salt", deterministic_salt(F.col("doc"), n_salts))
+            b = bands.select(
+                "*",
+                F.explode(F.array(*[F.lit(i) for i in range(n_salts)])).alias("__salt"),
+            )
+            cond = cond & (F.col("a.__salt") == F.col("b.__salt"))
+            a, b = a.alias("a"), b.alias("b")
+        else:
+            a = bands.alias("a")
+            b = bands.alias("b")
+        out = (
+            a.join(b, cond)
+            .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+            .distinct()
+        )
+        # eager checkpoint, not persist: one action fills it (reading sig's
+        # cache twice), and its blocks are releasable (release_checkpoints)
+        out = truncate_lineage(out)
     return out
 
 
@@ -492,8 +408,8 @@ def ngram_jaccard_pairs(
 
     Cache lifecycle (VERDICT r3 #3): the shingle explode is persisted
     only while this call materializes the pair result, then released.
-    The RETURNED DataFrame comes back persisted + computed — the one
-    cache entry the caller owns (``release_checkpoints(result)`` when done — the result is checkpoint-backed since r9; a plain ``unpersist`` is a no-op on it).
+    The RETURNED DataFrame is an eager checkpoint the caller owns
+    (``release_checkpoints(result)`` when done).
     """
     sh = _shingle_rows(df, id_col, text_col, shingle_n)
     if max_doc_freq is not None:
@@ -513,24 +429,15 @@ def ngram_jaccard_pairs(
     # 32 cores; serialized, the stall collapses and the join stage
     # becomes the wall.  Same move as jaccard_pairs_auto's shared
     # explode (ADVICE r9 #1).
-    from pyspark import StorageLevel
-
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-    # no eager fill — same shuffle-equi-join reasoning as
-    # lsh_candidate_pairs (eager count measured strictly slower)
-    out = _posting_pairs_from(sh, threshold)
-    # truncate_lineage (eager localCheckpoint), NOT persist: a persist
-    # here is pinned by the CacheManager until an explicit unpersist —
-    # measured r9: a dropped persisted frame is NEVER reclaimed, so the
-    # old `out.persist()` leaked one pair-sized cache entry PER CALL
-    # for the application lifetime.  The checkpoint materializes out in
-    # one action (reading sh's cache twice, as before) and is
-    # releasable: consumers free it with release_checkpoints(result),
-    # and connected_components(release_input=True) frees it as soon as
-    # its first round materializes.
-    out = truncate_lineage(out)
-    sh.unpersist(True)
-    return out
+    with pinned(sh, StorageLevel.MEMORY_AND_DISK):
+        # no eager fill — same shuffle-equi-join reasoning as
+        # lsh_candidate_pairs (eager count measured strictly slower).
+        # The checkpoint materializes the pairs in one action (reading
+        # sh's cache twice) and is releasable: consumers free it with
+        # release_checkpoints(result), and
+        # connected_components(release_input=True) frees it as soon as
+        # its first round materializes.
+        return truncate_lineage(_posting_pairs_from(sh, threshold))
 
 
 def connected_components(
@@ -561,7 +468,7 @@ def connected_components(
     and driver-side optimization time grows super-linearly (measured:
     1.3s -> 14s per round by round 5 at sf0.1 before truncation).  On a
     cluster, set a checkpoint dir so rounds survive executor loss (see
-    the helper's docstring).
+    ``plans.lifecycle.truncate_lineage``).
     """
     from pyspark.sql import Window
 
@@ -616,8 +523,7 @@ def connected_components(
         # both are distinct sets: equal iff same size and nxt ⊆ e
         converged = n_new == n_e and nxt.exceptAll(e).isEmpty()
         # the convergence exceptAll was the LAST read of the previous
-        # round — free its blocks explicitly (GC reclamation does not
-        # happen under pinned-thread py4j; see truncate_lineage)
+        # round — free it now (plans.lifecycle)
         release_checkpoints(e)
         e, n_e = nxt, n_new
         if converged:
@@ -804,8 +710,8 @@ def sparse_cosine_pairs(
     Cache lifecycle: the posting table feeds three consumers (df cap,
     both join sides, norms); it is persisted only while this call
     materializes the pair table, then released blocking.  The RETURNED
-    DataFrame comes back persisted + computed — the one cache entry the
-    caller owns (``release_checkpoints(result)`` when done — the result is checkpoint-backed since r9; a plain ``unpersist`` is a no-op on it).
+    DataFrame is an eager checkpoint the caller owns
+    (``release_checkpoints(result)`` when done).
     """
     from .text import word_ngrams
 
@@ -825,40 +731,38 @@ def sparse_cosine_pairs(
             "term",
             "left_semi",
         )
-    tf = tf.persist()
-    tf.count()  # eager fill — see jaccard_prefix_pairs: broadcast
-    # builds on async threads must find a warm cache
-    norms = tf.groupBy("doc").agg(
-        F.sqrt(F.sum(F.col("tf") * F.col("tf"))).alias("nrm")
-    )
-    a = tf.select(
-        "term", F.col("doc").alias("doc_a"), F.col("tf").alias("tf_a")
-    )
-    b = tf.select(
-        "term", F.col("doc").alias("doc_b"), F.col("tf").alias("tf_b")
-    )
-    dots = (
-        a.join(b, "term")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.sum(F.col("tf_a") * F.col("tf_b")).alias("dot"))
-    )
-    na = norms.select(F.col("doc").alias("doc_a"), F.col("nrm").alias("na"))
-    nb = norms.select(F.col("doc").alias("doc_b"), F.col("nrm").alias("nb"))
-    out = (
-        dots.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(F.col("dot") / (F.col("na") * F.col("nb")), 6).alias("cos_sim"),
+    with pinned(tf):
+        tf.count()  # eager fill — see jaccard_prefix_pairs: broadcast
+        # builds on async threads must find a warm cache
+        norms = tf.groupBy("doc").agg(
+            F.sqrt(F.sum(F.col("tf") * F.col("tf"))).alias("nrm")
         )
-        .where(F.col("cos_sim") >= threshold)
-    )
-    # eager checkpoint, not persist (releasable; r9 finding)
-    out = truncate_lineage(out)
-    tf.unpersist(True)  # blocking, so storage state is deterministic
-    return out
+        a = tf.select(
+            "term", F.col("doc").alias("doc_a"), F.col("tf").alias("tf_a")
+        )
+        b = tf.select(
+            "term", F.col("doc").alias("doc_b"), F.col("tf").alias("tf_b")
+        )
+        dots = (
+            a.join(b, "term")
+            .where(F.col("doc_a") < F.col("doc_b"))
+            .groupBy("doc_a", "doc_b")
+            .agg(F.sum(F.col("tf_a") * F.col("tf_b")).alias("dot"))
+        )
+        na = norms.select(F.col("doc").alias("doc_a"), F.col("nrm").alias("na"))
+        nb = norms.select(F.col("doc").alias("doc_b"), F.col("nrm").alias("nb"))
+        out = (
+            dots.join(na, "doc_a")
+            .join(nb, "doc_b")
+            .select(
+                "doc_a",
+                "doc_b",
+                F.round(F.col("dot") / (F.col("na") * F.col("nb")), 6).alias("cos_sim"),
+            )
+            .where(F.col("cos_sim") >= threshold)
+        )
+        # eager checkpoint, not persist (releasable)
+        return truncate_lineage(out)
 
 
 def jaccard_prefix_pairs(
@@ -930,63 +834,61 @@ def jaccard_prefix_pairs(
             F.transform(F.col("ds"), lambda s: s["g"]).alias("sh"),
             F.size("ds").alias("n_sh"),
         )
-        # three consumers (prefix explode + both verify sides):
-        # persist + EAGER fill, so the verify joins' async broadcast
-        # builds find a warm cache instead of racing a cold one
-        .persist()
     )
-    ordered.count()
-    prefix_len = (
-        F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-    ).cast("int")
-    pre = ordered.select(
-        "doc",
-        "n_sh",
-        F.explode(F.slice(F.col("sh"), 1, prefix_len)).alias("g"),
-    )
-    a = pre.select(
-        F.col("g"),
-        F.col("doc").alias("doc_a"),
-        F.col("n_sh").alias("na"),
-    )
-    b = pre.select(
-        F.col("g"),
-        F.col("doc").alias("doc_b"),
-        F.col("n_sh").alias("nb"),
-    )
-    cand = (
-        a.join(b, "g")
-        .where(
-            (F.col("doc_a") < F.col("doc_b"))
-            # length prune: J >= t implies t*max(na,nb) <= min(na,nb)
-            & (F.lit(threshold) * F.col("nb") <= F.col("na"))
-            & (F.lit(threshold) * F.col("na") <= F.col("nb"))
+    # three consumers (prefix explode + both verify sides): pin + EAGER
+    # fill, so the verify joins' async broadcast builds find a warm
+    # cache instead of racing a cold one
+    with pinned(ordered):
+        ordered.count()
+        prefix_len = (
+            F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
+        ).cast("int")
+        pre = ordered.select(
+            "doc",
+            "n_sh",
+            F.explode(F.slice(F.col("sh"), 1, prefix_len)).alias("g"),
         )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    sa = ordered.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"), F.col("n_sh").alias("na"))
-    sb = ordered.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"), F.col("n_sh").alias("nb"))
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    out = (
-        cand.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            inter.alias("n_common"),
-            F.col("na").alias("n_a"),
-            F.col("nb").alias("n_b"),
-            F.round(
-                inter / (F.col("na") + F.col("nb") - inter), 6
-            ).alias("jaccard"),
+        a = pre.select(
+            F.col("g"),
+            F.col("doc").alias("doc_a"),
+            F.col("n_sh").alias("na"),
         )
-        .where(F.col("jaccard") >= threshold)
-    )
-    # eager checkpoint, not persist (releasable; r9 finding)
-    out = truncate_lineage(out)
-    ordered.unpersist(True)  # blocking, so storage state is deterministic
-    return out
+        b = pre.select(
+            F.col("g"),
+            F.col("doc").alias("doc_b"),
+            F.col("n_sh").alias("nb"),
+        )
+        cand = (
+            a.join(b, "g")
+            .where(
+                (F.col("doc_a") < F.col("doc_b"))
+                # length prune: J >= t implies t*max(na,nb) <= min(na,nb)
+                & (F.lit(threshold) * F.col("nb") <= F.col("na"))
+                & (F.lit(threshold) * F.col("na") <= F.col("nb"))
+            )
+            .select("doc_a", "doc_b")
+            .distinct()
+        )
+        sa = ordered.select(F.col("doc").alias("doc_a"), F.col("sh").alias("sh_a"), F.col("n_sh").alias("na"))
+        sb = ordered.select(F.col("doc").alias("doc_b"), F.col("sh").alias("sh_b"), F.col("n_sh").alias("nb"))
+        inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
+        out = (
+            cand.join(sa, "doc_a")
+            .join(sb, "doc_b")
+            .select(
+                "doc_a",
+                "doc_b",
+                inter.alias("n_common"),
+                F.col("na").alias("n_a"),
+                F.col("nb").alias("n_b"),
+                F.round(
+                    inter / (F.col("na") + F.col("nb") - inter), 6
+                ).alias("jaccard"),
+            )
+            .where(F.col("jaccard") >= threshold)
+        )
+        # eager checkpoint, not persist (releasable)
+        return truncate_lineage(out)
 
 
 def jaccard_regime_probe(
@@ -1136,23 +1038,19 @@ def jaccard_pairs_auto(
     if probe_sample_rate is None:
         size = input_bytes(df)
         if size is not None and size <= SHARED_EXPLODE_MAX_BYTES:
-            from pyspark import StorageLevel
-
             # serialized blocks: the exploded posting relation is the
             # biggest thing this operator ever stores; the deserialized
             # default costs several x the footprint for one re-read
-            sh = _shingle_rows(df, id_col, text_col, shingle_n).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            regime = jaccard_regime_probe(
-                df, id_col, text_col, shingle_n=shingle_n,
-                fanout_threshold=fanout_threshold, _prebuilt_sh=sh,
-            )
-            if regime == "posting":
-                out = truncate_lineage(_posting_pairs_from(sh, threshold))
-                sh.unpersist(True)
-                return out
-            sh.unpersist(True)
+            with pinned(
+                _shingle_rows(df, id_col, text_col, shingle_n),
+                StorageLevel.MEMORY_AND_DISK,
+            ) as sh:
+                regime = jaccard_regime_probe(
+                    df, id_col, text_col, shingle_n=shingle_n,
+                    fanout_threshold=fanout_threshold, _prebuilt_sh=sh,
+                )
+                if regime == "posting":
+                    return truncate_lineage(_posting_pairs_from(sh, threshold))
             return jaccard_prefix_pairs(
                 df, id_col, text_col, shingle_n=shingle_n, threshold=threshold
             ).select("doc_a", "doc_b", "jaccard")

@@ -23,8 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.lifecycle import pinned, truncate_lineage
 from ..plans.parallelism import COPURCHASE_FANOUT_WEIGHT, fanout_width, loop_width
-from .dedup import truncate_lineage
 
 
 def node_degrees(edges: DataFrame, a: str = "a", b: str = "b") -> DataFrame:
@@ -161,7 +161,6 @@ def pagerank(
     b: str = "b",
     iterations: int = 5,
     damping: float = 0.85,
-    persist_each: bool = True,
     broadcast_ranks: bool | None = None,
     broadcast_nodes_max: int = 4_000_000,
 ) -> DataFrame:
@@ -180,10 +179,10 @@ def pagerank(
     dangling-sum correction term and a fixed iteration count is exactly
     expressible as unrolled SQL — which is what the DuckDB oracle runs.
 
-    ``persist_each`` (default on) materializes exactly what a single
-    evaluation cannot share through exchange reuse — the edge list
-    (read twice by the symmetrizing union, and by two separate actions:
-    the probe and the caller's) and the |V|-row degree table (read by
+    The call materializes exactly what a single evaluation cannot share
+    through exchange reuse — the edge list (read twice by the
+    symmetrizing union, and by two separate actions: the probe and the
+    caller's) and the |V|-row degree table (read by
     the g build, the regime probe and the final join) — as EAGER LOCAL
     CHECKPOINTS, not ``.persist()`` (r9/r10 findings: a CacheManager
     persist both pins the pre-AQE-coalescing full-width shuffle layout,
@@ -196,10 +195,9 @@ def pagerank(
     plan needs no terminal checkpoint, VERDICT r9 #2), with the
     loop-invariant ``g`` served by in-query exchange reuse rather than
     a checkpoint of its own; callers done with the result free the
-    scaffolding with ``dedup.release_checkpoints(result)``.  The
-    round-k rank vectors form a linear chain, each consumed exactly
-    once by round k+1, so materializing them buys nothing.  Turn off
-    only for pure-plan inspection.
+    scaffolding with ``plans.lifecycle.release_checkpoints(result)``.
+    The round-k rank vectors form a linear chain, each consumed exactly
+    once by round k+1, so materializing them buys nothing.
 
     ``broadcast_ranks`` regime (None = probe |V| against
     ``broadcast_nodes_max``): the rank vector is |V| rows of
@@ -218,25 +216,22 @@ def pagerank(
     """
     nparts = None
     n_known: int | None = None
-    edges_chk = None
-    if persist_each:
-        # build the edge list ONCE per call: ``sym`` is a union of two
-        # selects of ``edges``, so every evaluation of sym runs the
-        # caller's edge build TWICE (guide §2.4 duplicated subtree).
-        edges = edges_chk = truncate_lineage(edges)
+    # build the edge list ONCE per call: ``sym`` is a union of two
+    # selects of ``edges``, so every evaluation of sym runs the
+    # caller's edge build TWICE (guide §2.4 duplicated subtree).
+    edges = truncate_lineage(edges)
     sym = edges.select(F.col(a).alias("src"), F.col(b).alias("dst")).unionAll(
         edges.select(F.col(b).alias("src"), F.col(a).alias("dst"))
     )
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    if persist_each:
-        deg = truncate_lineage(deg)
+    deg = truncate_lineage(
+        sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+    )
     if broadcast_ranks is None:
-        # regime probe: with persist_each on this reads the |V|-row deg
-        # CHECKPOINT (a trivial job — r9 paid a dedicated edge-build
-        # pass here), plus the avg-degree gate shared with
-        # label_propagation — broadcast only buys when the removed
-        # per-round edge shuffle dominates the added per-round rank
-        # collect+broadcast
+        # regime probe: this reads the |V|-row deg CHECKPOINT (a
+        # trivial job — r9 paid a dedicated edge-build pass here), plus
+        # the avg-degree gate shared with label_propagation — broadcast
+        # only buys when the removed per-round edge shuffle dominates
+        # the added per-round rank collect+broadcast
         n_nodes, n_sym = deg.agg(
             F.count(F.lit(1)), F.coalesce(F.sum("deg"), F.lit(0))
         ).collect()[0]  # n_sym = 2|E|
@@ -292,11 +287,9 @@ def pagerank(
     # ONE exchange (ReuseExchange / AQE stage cache) and every
     # per-round aggregate is a COMPLETE agg with zero exchanges.
     # g's checkpoint blocks are freed by release_checkpoints(result);
-    # edges_chk has no reader once g and deg are materialized and is
-    # freed HERE (explicit — GC never reclaims under pinned-thread
-    # py4j).
-    if persist_each:
-        g = truncate_lineage(g, release=edges_chk)
+    # the edge checkpoint has no reader once g and deg are materialized
+    # and is freed HERE.
+    g = truncate_lineage(g, release=edges)
     if broadcast_ranks or nparts:
         g = (
             g.repartition(nparts, F.col("dst"))
@@ -367,7 +360,6 @@ def kcore(
     iterations: int,
     a: str = "a",
     b: str = "b",
-    persist_each: bool = True,
 ) -> DataFrame:
     """Fixed-iteration k-core peel on an undirected edge list: each
     round drops every node whose CURRENT degree is below ``k``
@@ -388,32 +380,26 @@ def kcore(
     would nest 3^rounds copies of the edge build; ``truncate_lineage``
     cuts it each round (reliable checkpoint when the session has a
     checkpoint dir — set one on a real cluster — else localCheckpoint;
-    see dedup.truncate_lineage).  A finished round's blocks are released
-    EXPLICITLY via ``truncate_lineage(..., release=prev)`` — GC-driven
-    reclamation does not happen under pinned-thread py4j (r9).
+    see ``plans.lifecycle``).  A finished round is released via
+    ``truncate_lineage(..., release=prev)``.
     """
-    if persist_each:
-        # edge build ONCE inside the round-0 checkpoint job (see
-        # pagerank): the union below reads ``edges`` twice.
-        edges = edges.persist()
-    cur = edges.select(F.col(a).alias("src"), F.col(b).alias("dst")).unionAll(
-        edges.select(F.col(b).alias("src"), F.col(a).alias("dst"))
-    )
-    if persist_each:
-        cur = truncate_lineage(cur)
-        edges.unpersist()
+    # edge build ONCE inside the round-0 checkpoint job (see pagerank):
+    # the union below reads ``edges`` twice.
+    with pinned(edges):
+        cur = truncate_lineage(
+            edges.select(F.col(a).alias("src"), F.col(b).alias("dst")).unionAll(
+                edges.select(F.col(b).alias("src"), F.col(a).alias("dst"))
+            )
+        )
     for _ in range(iterations):
         deg = cur.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= k).select("src")
         nxt = cur.join(keep, "src", "left_semi").join(
             keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
         )
-        if persist_each:
-            # release the previous round once the new checkpoint has
-            # materialized (explicit — GC never reclaims these under
-            # pinned-thread py4j; see dedup.truncate_lineage)
-            nxt = truncate_lineage(nxt, release=cur)
-        cur = nxt
+        # release the previous round once the new checkpoint has
+        # materialized
+        cur = truncate_lineage(nxt, release=cur)
     return cur.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
@@ -424,7 +410,6 @@ def label_propagation(
     iterations: int,
     a: str = "a",
     b: str = "b",
-    persist_each: bool = True,
     broadcast_labels: bool | None = None,
     broadcast_nodes_max: int = 4_000_000,
 ) -> DataFrame:
@@ -456,14 +441,12 @@ def label_propagation(
     (HashPartitioning(dst) clusters (node, label) and node alike) —
     the edge list shuffles once for all rounds.
     """
-    if persist_each:
-        # edge build ONCE per call (see pagerank): sym's union embeds
-        # the caller's edge derivation twice.  A releasable local
-        # checkpoint, not .persist() — the checkpoint keeps the
-        # AQE-coalesced partitioning (a cache pins the full-width
-        # shuffle layout) and backs the LAZY returned plan, freed by
-        # release_checkpoints(result).
-        edges = truncate_lineage(edges)
+    # edge build ONCE per call (see pagerank): sym's union embeds the
+    # caller's edge derivation twice.  A releasable local checkpoint,
+    # not a cache pin — the checkpoint keeps the AQE-coalesced
+    # partitioning (a cache pins the full-width shuffle layout) and
+    # backs the LAZY returned plan, freed by release_checkpoints(result).
+    edges = truncate_lineage(edges)
     sym = edges.select(F.col(a).alias("src"), F.col(b).alias("dst")).unionAll(
         edges.select(F.col(b).alias("src"), F.col(a).alias("dst"))
     )
@@ -551,8 +534,8 @@ def pointer_doubling_closure(
     A parent id missing from the table resolves as its child's root
     (dangling-link tolerance).  Rounds multiply lineage (each reads the
     previous table twice), so each round is lineage-truncated like
-    kcore (dedup.truncate_lineage: reliable checkpoint on a configured
-    cluster, localCheckpoint otherwise).
+    kcore (``plans.lifecycle.truncate_lineage``: reliable checkpoint on
+    a configured cluster, localCheckpoint otherwise).
     """
     links = nodes.select(
         F.col(node_col).alias("node"),

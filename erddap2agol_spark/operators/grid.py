@@ -16,6 +16,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.lifecycle import truncate_lineage
+
 
 def melt_measures(df: DataFrame, dims: Sequence[str], measures: Sequence[str]) -> DataFrame:
     """S7: wide measure columns -> long (var, value) pairs via ``stack``
@@ -63,7 +65,6 @@ def hyperslab(
         if time_index is not None:
             out = out.filter(time_index % time_stride == 0)
         else:
-            from .dedup import truncate_lineage
             from .windows import _ranged_row_number
 
             # distinct rows: row_number == dense_rank, so the scalable

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..plans.lifecycle import release_checkpoints, truncate_lineage
 from ..plans.parallelism import ensure_parallelism
 from .text import tokens as _text_tokens
 
@@ -125,15 +126,13 @@ def bigram_model(docs: DataFrame, id_col: str, text_col: str) -> tuple[DataFrame
     # branches' exchanges stop canonicalizing equal, and ReusedExchange
     # never fires — without pinning, the corpus explode ran once per
     # branch (verified in the executed plan, review r8).
-    # truncate_lineage (checkpoint/localCheckpoint), not persist(): the
-    # blocks back the returned plan, and callers done with the result
-    # free them explicitly via dedup.release_checkpoints (GC does NOT
-    # reclaim them under pinned-thread py4j — measured r9; see
-    # truncate_lineage).  The relation is vocabulary²-sized either way.
-    cb_all = bg_all.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("nb"))
-    from .dedup import truncate_lineage
-
-    cb_all = truncate_lineage(cb_all)
+    # truncate_lineage (checkpoint/localCheckpoint), not a cache pin:
+    # the blocks back the returned plan, and callers done with the
+    # result free them via release_checkpoints (plans.lifecycle).  The
+    # relation is vocabulary²-sized either way.
+    cb_all = truncate_lineage(
+        bg_all.groupBy("prev", "cur").agg(F.count(F.lit(1)).alias("nb"))
+    )
     cb = cb_all.where(F.col("cur").isNotNull())
     cp = cb.groupBy("prev").agg(F.sum("nb").alias("np"))
     vocab = cb_all.agg(F.countDistinct("prev").alias("v"))
@@ -430,9 +429,7 @@ def _bpe_train_rows(
     word-frequency table is returned INSTEAD of being released — the one
     corpus-sized aggregate — so an encoder reuses it rather than paying
     a second corpus scan; ownership transfers to the caller
-    (``dedup.release_checkpoints`` when done)."""
-    from .dedup import release_checkpoints, truncate_lineage
-
+    (``release_checkpoints`` when done)."""
     if n_merges <= 0:
         vocab0 = (
             truncate_lineage(token_vocabulary(docs, text_col))
@@ -520,8 +517,8 @@ def bpe_symbol_histogram(
     (TakeOrderedAndProject), and the merge table itself rides in as
     driver literals (it is bpe_train's bounded output).  The returned
     plan is backed by that vocabulary checkpoint: callers done with the
-    result free its blocks via ``dedup.release_checkpoints`` (the same
-    terminal-result contract as the near-dup operators).
+    result free its blocks via ``plans.lifecycle.release_checkpoints``
+    (the same terminal-result contract as the near-dup operators).
     """
     rows, raw_pairs, vocab = _bpe_train_rows(
         docs, text_col, n_merges, checkpoint_every, keep_vocab=True
@@ -583,7 +580,7 @@ def bpe_doc_token_counts(
     followed by ONE per-document aggregate.  No per-document Python,
     no window; AQE broadcasts the dictionary when it fits.  The
     returned plan is backed by the vocabulary checkpoint — callers free
-    it via ``dedup.release_checkpoints`` when done.
+    it via ``plans.lifecycle.release_checkpoints`` when done.
     """
     _, raw_pairs, vocab = _bpe_train_rows(
         docs, text_col, n_merges, checkpoint_every, keep_vocab=True

@@ -17,6 +17,7 @@ import pandas as pd  # module-level so PEP-563 string hints on pandas
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..plans.lifecycle import truncate_lineage
 from ..plans.parallelism import VECTOR_FANOUT_WEIGHT, ensure_parallelism
 
 
@@ -289,9 +290,7 @@ def brute_force_topk_matrix(
             # fast path stays fully lazy: its one broadcast is held by
             # the returned plan (bounded by the query-set size).  The
             # per-block checkpoints back the returned plan; callers done
-            # with the result free them via dedup.release_checkpoints.
-            from .dedup import truncate_lineage
-
+            # with the result free them via release_checkpoints.
             part = truncate_lineage(part)
             bc.destroy()
         partials = part if partials is None else partials.unionAll(part)
@@ -877,13 +876,9 @@ def cell_near_dup_pairs(
     # relation (ADVICE r8: truncating after the join left the members
     # branch on the raw lineage and the assignment ran twice).  The
     # blocks back the RETURNED plan, so they cannot be freed in-call;
-    # callers done with the result free them explicitly with
-    # dedup.release_checkpoints(result) — GC does NOT reclaim them
-    # under PySpark's default pinned-thread mode (measured r9; see
-    # truncate_lineage).  At any scale this is 2 small columns x
-    # n_probe rows, disk-spillable.
-    from .dedup import truncate_lineage
-
+    # callers done with the result free them with
+    # release_checkpoints(result) (plans.lifecycle).  At any scale this
+    # is 2 small columns x n_probe rows, disk-spillable.
     assign = truncate_lineage(assign)
     # vectors join in WITHOUT the interpreted norm fold (norms fall out
     # of the stacked matrix below for the cost of one einsum)

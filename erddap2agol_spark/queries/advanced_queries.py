@@ -16,6 +16,7 @@ from ..functions.datetimes import epoch_us
 from ..functions.dsl import numeric_prefix_cast
 from ..operators import dedup
 from ..operators.text import quality_score
+from ..plans.lifecycle import pinned, truncate_lineage
 from ..sources.tables import load_table
 from . import register
 
@@ -159,14 +160,11 @@ _SIMHASH_CTE = """
 def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     # cache lifecycle (pagerank pattern): the fingerprint table is read
-    # three times (strategy count + both join sides), so persist it only
-    # while the pair result materializes, then release — the returned
-    # result is the one cache entry the caller owns
-    sh = dedup.simhash16(docs, "doc_id", "text").persist()
-    # returned frame: eager checkpoint, not persist (releasable; r9)
-    out = dedup.truncate_lineage(dedup.simhash_near_pairs(sh, max_hamming=2))
-    sh.unpersist(True)
-    return out
+    # three times (strategy count + both join sides), so pin it only
+    # while the pair result materializes — the returned result is an
+    # eager checkpoint the caller owns (release_checkpoints)
+    with pinned(dedup.simhash16(docs, "doc_id", "text")) as sh:
+        return truncate_lineage(dedup.simhash_near_pairs(sh, max_hamming=2))
 
 
 _SHINGLES_CTE = """

@@ -523,9 +523,9 @@ def build_corpus_manifest(
     """
     from pyspark.sql import Window
 
-    from ..operators.dedup import truncate_lineage
     from ..operators.sampling import hash_bucket
     from ..operators.text import bloom_contamination
+    from ..plans.lifecycle import truncate_lineage
     from ..plans.parallelism import QUALITY_GATE_FANOUT_WEIGHT, ensure_parallelism
 
     from .pipeline_queries import gopher_keep_bit
@@ -581,7 +581,7 @@ def build_corpus_manifest(
     # checkpoint makes the single evaluation structural (exact at any
     # scale, halves the plan the driver must optimize) and the relation
     # is |docs|-row narrow ints — bounded.  Measured ~0.3 s at sf0.1;
-    # releasable via release_checkpoints(result) (r9 lifecycle).
+    # releasable via release_checkpoints(result) (plans.lifecycle).
     flags = truncate_lineage(flags)
     keep = (
         (F.col("q_keep") == 1) & (F.col("clean") == 1) & (F.col("is_canonical") == 1)

@@ -8,12 +8,15 @@ bit_count/xor and a tuple-comparison orientation.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup
 from ..operators.graph import triangle_count
 from ..operators.search import cooccurrence_pmi
+from ..plans.lifecycle import pinned, truncate_lineage
 from ..sources.tables import load_table
 from . import register
 
@@ -128,23 +131,20 @@ def sim_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pipeline (sf0.1, fresh session: 33.5 s -> 23.7 s cold, 22.4 s ->
     # 14.7 s steady; the remainder is the census itself — this graph is
     # DENSE, 540k edges / 26.7M triangles over 5k docs at hamming<=2).
-    # Scaffolding is released as soon as its consumer materializes; the
-    # 1-row result is the one cache entry the caller owns.
-    sh = dedup.simhash16(docs, "doc_id", "text").persist()
-    edges = (
-        dedup.simhash_near_pairs(sh, max_hamming=_MAX_HAMMING)
-        .select("doc_a", "doc_b")
-        .persist()
-    )
-    edges.count()
-    sh.unpersist(True)
-    # eager checkpoint, not persist, for the returned frame: a persist
-    # is CacheManager-pinned until explicit unpersist (r9 finding) and
-    # would leak one entry per call; the checkpoint is releasable via
-    # dedup.release_checkpoints
-    out = dedup.truncate_lineage(triangle_count(edges, a="doc_a", b="doc_b"))
-    edges.unpersist(True)
-    return out
+    # Scaffolding is released as soon as its consumer materializes (sh
+    # after the edge fill, the edge pin when ``edge_pin`` closes); the
+    # 1-row result is an eager checkpoint the caller owns
+    # (release_checkpoints).
+    with ExitStack() as edge_pin:
+        with pinned(dedup.simhash16(docs, "doc_id", "text")) as sh:
+            edges = edge_pin.enter_context(
+                pinned(
+                    dedup.simhash_near_pairs(sh, max_hamming=_MAX_HAMMING)
+                    .select("doc_a", "doc_b")
+                )
+            )
+            edges.count()
+        return truncate_lineage(triangle_count(edges, a="doc_a", b="doc_b"))
 
 
 _PR_ITERS, _PR_DAMP = 5, 0.85

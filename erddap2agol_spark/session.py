@@ -59,7 +59,7 @@ def get_spark(
         .config("spark.sql.files.minPartitionNum", cpus)
         # Kryo for block/broadcast serialization: the iterative
         # operators store loop-invariant relations as SERIALIZED local
-        # checkpoints (dedup.truncate_lineage), and the default
+        # checkpoints (plans.lifecycle.truncate_lineage), and the default
         # JavaSerializer writes those blocks several times slower than
         # Kryo for the same bytes.  SQL shuffles use the dedicated
         # UnsafeRow serializer either way, so this touches only RDD

@@ -44,6 +44,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..plans.lifecycle import pinned
 from .fsio import for_path, snapshot_registry
 
 WKID = 4326  # the reference pins WGS84 (agol_wrangler.py copy_raster)
@@ -282,21 +283,13 @@ def write_raster_tiles(
     """
     # pin the source for the call so the lattice job and the tile write
     # share ONE evaluation (a griddap HTTP source otherwise re-fetches
-    # every division URL per action); a caller's own cache is reused and
-    # left in place.  The release blocks, so no block removal runs under
-    # the caller's next action
-    pinned = cells.storageLevel == StorageLevel.NONE
-    if pinned:
-        cells.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    # every division URL per action)
+    with pinned(cells, StorageLevel.MEMORY_AND_DISK):
         lattice = derive_lattice(cells, lat_col, lon_col)
         manifest_rows = _write_tiles(
             cells, lattice, root, var_col, slice_cols, lat_col, lon_col,
             value_col, tile_h, tile_w, nodata,
         )
-    finally:
-        if pinned:
-            cells.unpersist(blocking=True)
     meta = {
         "wkid": WKID,
         "nodata": nodata,

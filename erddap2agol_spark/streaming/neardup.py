@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup
+from ..plans.lifecycle import pinned, release_checkpoints, truncate_lineage
 
 _BATCH_COL = "ingest_batch"
 
@@ -105,8 +106,7 @@ def ingest_batch(
         batch.select(F.col(id_col), F.col(text_col)),
         id_col, text_col, n_perm, shingle_n,
     )
-    bands = dedup.band_keys(sig, n_perm, rows_per_band).persist()
-    try:
+    with pinned(dedup.band_keys(sig, n_perm, rows_per_band)) as bands:
         store = _store_bands(spark, store_dir, exclude_batch=batch_id)
         if store is not None:
             # Two broadcast probes, both map-only over the store: first
@@ -144,7 +144,7 @@ def ingest_batch(
         # Truncate lineage BEFORE writing: the second write must not
         # re-execute the store probe after the first write has replaced
         # the store partition under it (replay would read deleted files).
-        keep_bands = dedup.truncate_lineage(
+        keep_bands = truncate_lineage(
             bands0.join(F.broadcast(dropped), "doc", "left_anti")
         )
         keep_ids = keep_bands.select("doc").distinct()
@@ -158,14 +158,10 @@ def ingest_batch(
             id_col,
             "left_semi",
         ).write.mode("overwrite").parquet(f"{out_dir}/{part}")
-        # both writes are done — free the batch's checkpoint blocks
-        # explicitly (one leaked entry PER MICRO-BATCH otherwise: GC
-        # never reclaims these under pinned-thread py4j, see
-        # dedup.truncate_lineage)
-        dedup.release_checkpoints(keep_bands)
+        # both writes are done — free the batch's checkpoint (one
+        # leaked entry PER MICRO-BATCH otherwise)
+        release_checkpoints(keep_bands)
         return n_kept
-    finally:
-        bands.unpersist()
 
 
 def start_lsh_dedup_ingest(

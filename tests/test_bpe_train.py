@@ -121,10 +121,7 @@ def test_checkpoint_chain_releases_and_matches(spark):
 def test_caller_checkpoint_input_survives(spark):
     """Input-shield contract: a checkpoint-backed caller frame must
     remain readable after bpe_train's internal release chain runs."""
-    from erddap2agol_spark.operators.dedup import (
-        release_checkpoints,
-        truncate_lineage,
-    )
+    from erddap2agol_spark.plans.lifecycle import release_checkpoints, truncate_lineage
 
     docs = truncate_lineage(
         spark.createDataFrame([("low low lower",)], "text string")
@@ -283,7 +280,7 @@ def test_histogram_single_corpus_scan(spark):
     """The encode half must REUSE the trainer's vocabulary checkpoint:
     exactly one corpus-sized token aggregation per call (review r9),
     and the result's backing checkpoint is caller-releasable."""
-    from erddap2agol_spark.operators.dedup import release_checkpoints
+    from erddap2agol_spark.plans.lifecycle import release_checkpoints
     from erddap2agol_spark.operators.lm import bpe_symbol_histogram
 
     # id sets, not counts: another test's blocks may be reclaimed by the
@@ -302,7 +299,7 @@ def test_doc_token_counts_match_mirror(spark):
     """Per-document counts under the trained table: cross-checked
     against the list-algebra mirror's final vocabulary segmentation,
     and token mass conserved against the trainer's compression curve."""
-    from erddap2agol_spark.operators.dedup import release_checkpoints
+    from erddap2agol_spark.plans.lifecycle import release_checkpoints
     from erddap2agol_spark.operators.lm import bpe_doc_token_counts, bpe_train
 
     texts = {

@@ -105,6 +105,7 @@ def test_leakage_safe_split_never_straddles(spark):
     split assignment equals the hash of its cluster label — no doc can
     leak a near-copy across train/eval."""
     from erddap2agol_spark.operators import dedup, sampling
+    from erddap2agol_spark.plans.lifecycle import release_checkpoints
 
     for seed in (3, 19):
         rng = random.Random(seed)
@@ -132,4 +133,4 @@ def test_leakage_safe_split_never_straddles(spark):
         for r in out:
             by_cluster.setdefault(r.cluster_id, set()).add(r.split)
         assert all(len(s) == 1 for s in by_cluster.values()), f"seed {seed}"
-        dedup.release_checkpoints(comp)
+        release_checkpoints(comp)

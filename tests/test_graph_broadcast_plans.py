@@ -1,7 +1,9 @@
 """Plan-shape pins for the broadcast-regime iterative graph operators
 (operators/graph.py): in broadcast mode the per-round work must compile
 to map-side broadcast joins whose aggregates reuse the dst partitioning
-— adding rounds must add ZERO shuffle exchanges."""
+— adding rounds must add ZERO shuffle exchanges.  Each pin reads the
+operator's real returned plan (rounds above the checkpointed edge and
+degree leaves) and releases those checkpoints afterwards."""
 
 from __future__ import annotations
 
@@ -16,14 +18,18 @@ from erddap2agol_spark.operators.graph import (
     label_propagation,
     pagerank,
 )
+from erddap2agol_spark.plans.lifecycle import release_checkpoints
 
 _EDGES = [(1, 2), (2, 3), (3, 1), (3, 4), (1, 4), (2, 4), (4, 5)]
 
 
 def _plan_of(df) -> str:
+    """The formatted physical plan of ``df``; ``df``'s checkpoints are
+    released once the plan is read."""
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
+    release_checkpoints(df)
     return buf.getvalue()
 
 
@@ -33,9 +39,8 @@ def _shuffles(plan: str) -> int:
 
 def _ensure_shuffles(plan: str) -> int:
     """Exchanges the OPTIMIZER required (ENSURE_REQUIREMENTS) — excludes
-    the explicit REPARTITION_BY_COL of the edge list, which is inlined
-    once per round in the unpersisted pure-plan expansion but served
-    from one cache at runtime (persist_each)."""
+    the explicit REPARTITION_BY_COL of the edge list, whose subtree is
+    identical in every round and shared by exchange reuse at runtime."""
     out = 0
     for block in plan.split("\n\n"):
         first = block.splitlines()[0] if block.splitlines() else ""
@@ -53,16 +58,13 @@ def test_lpa_broadcast_rounds_add_no_exchanges(spark):
     IDENTICAL at 2 and 6 iterations: every round is a broadcast join
     plus two aggregates that reuse HashPartitioning(dst)."""
     p2 = _plan_of(
-        label_propagation(_edges(spark), 2, persist_each=False, broadcast_labels=True)
+        label_propagation(_edges(spark), 2, broadcast_labels=True)
     )
     p6 = _plan_of(
-        label_propagation(_edges(spark), 6, persist_each=False, broadcast_labels=True)
+        label_propagation(_edges(spark), 6, broadcast_labels=True)
     )
     # required (ENSURE_REQUIREMENTS) exchanges must NOT scale with
     # rounds: both per-round aggregates reuse HashPartitioning(dst).
-    # (The REPARTITION_BY_COL of sym appears once per round only in
-    # this unpersisted pure-plan expansion — runtime serves it from
-    # one cache.)
     assert _ensure_shuffles(p2) == _ensure_shuffles(p6), (
         _ensure_shuffles(p2), _ensure_shuffles(p6))
     # and the rounds really are broadcast joins, not shuffled equi-joins
@@ -75,20 +77,18 @@ def test_lpa_equijoin_rounds_do_add_exchanges(spark):
     count — proving the previous test's zero is the broadcast design,
     not an artifact of the counter."""
     p2 = _plan_of(
-        label_propagation(_edges(spark), 2, persist_each=False, broadcast_labels=False)
+        label_propagation(_edges(spark), 2, broadcast_labels=False)
     )
     p6 = _plan_of(
-        label_propagation(_edges(spark), 6, persist_each=False, broadcast_labels=False)
+        label_propagation(_edges(spark), 6, broadcast_labels=False)
     )
     assert _ensure_shuffles(p6) > _ensure_shuffles(p2)
 
 
 def test_pagerank_broadcast_rounds_are_broadcast_joins(spark):
     """Each round's rank join must compile to a BroadcastHashJoin in
-    broadcast mode (the per-round edge-side shuffle exists only in the
-    unpersisted pure-plan expansion; at runtime the persisted g serves
-    every round from one dst-partitioned cache)."""
-    df = pagerank(_edges(spark), iterations=5, persist_each=False, broadcast_ranks=True)
+    broadcast mode, every round reading the one dst-partitioned g."""
+    df = pagerank(_edges(spark), iterations=5, broadcast_ranks=True)
     plan = _plan_of(df)
     assert plan.count("BroadcastHashJoin") >= 5
 
@@ -100,14 +100,14 @@ def test_regime_probe_dispatch(spark):
     on the rank column beyond what AQE would add — compare exchange
     scaling, the regime's signature."""
     # sparse: 7 edges over 5 nodes -> avg degree ~2.8 < 8 -> equi-join
-    p2 = _plan_of(label_propagation(_edges(spark), 2, persist_each=False))
-    p5 = _plan_of(label_propagation(_edges(spark), 5, persist_each=False))
+    p2 = _plan_of(label_propagation(_edges(spark), 2))
+    p5 = _plan_of(label_propagation(_edges(spark), 5))
     assert _ensure_shuffles(p5) > _ensure_shuffles(p2)
     # dense: complete graph on 10 nodes -> avg degree 9 -> broadcast
     k10 = [(i, j) for i in range(1, 11) for j in range(i + 1, 11)]
     dense = spark.createDataFrame(k10, "a long, b long")
-    d2 = _plan_of(label_propagation(dense, 2, persist_each=False))
-    d6 = _plan_of(label_propagation(dense, 6, persist_each=False))
+    d2 = _plan_of(label_propagation(dense, 2))
+    d6 = _plan_of(label_propagation(dense, 6))
     assert _ensure_shuffles(d2) == _ensure_shuffles(d6)
 
 
@@ -137,9 +137,14 @@ def test_copurchase_edges_match_self_join(spark):
 
 
 def _deg_narrowed(df) -> bool:
-    return re.search(
-        r"cast\(deg#\d+L as int\)", df._jdf.queryExecution().analyzed().toString()
-    ) is not None
+    """Whether ``deg`` is an int (not a bigint) in the output of the
+    ``g`` checkpoint leaf — the (src, dst, deg) relation the rounds
+    read; ``df``'s checkpoints are released once the plan is read."""
+    plan = df._jdf.queryExecution().analyzed().toString()
+    release_checkpoints(df)
+    g = re.search(r"LogicalRDD \[src#\d+L?, dst#\d+L?, deg#\d+(L?)\]", plan)
+    assert g is not None, plan
+    return g.group(1) == ""
 
 
 def test_pagerank_forced_broadcast_keeps_bigint_deg(spark):
@@ -147,11 +152,9 @@ def test_pagerank_forced_broadcast_keeps_bigint_deg(spark):
     forces ``broadcast_ranks=True`` skips the probe, so ``deg`` on the
     edge relation stays a bigint.  The probed broadcast regime (dense
     graph) still narrows it."""
-    forced = pagerank(_edges(spark), iterations=2, persist_each=False, broadcast_ranks=True)
+    forced = pagerank(_edges(spark), iterations=2, broadcast_ranks=True)
     assert not _deg_narrowed(forced)
     k10 = [(i, j) for i in range(1, 11) for j in range(i + 1, 11)]
-    probed = pagerank(
-        spark.createDataFrame(k10, "a long, b long"), iterations=2, persist_each=False
-    )
+    probed = pagerank(spark.createDataFrame(k10, "a long, b long"), iterations=2)
     assert _deg_narrowed(probed)
     assert dict(forced.dtypes)["deg"] == "bigint"

@@ -100,15 +100,18 @@ def test_lpa_round_semantics_hand_computed(spark):
 
 
 def test_lpa_plan_no_window(spark):
+    from erddap2agol_spark.plans.lifecycle import release_checkpoints
+
     edges = spark.createDataFrame([(1, 2), (2, 3)], "a int, b int")
-    out = label_propagation(edges, iterations=2, persist_each=False)
+    out = label_propagation(edges, iterations=2)
     plan = out._jdf.queryExecution().executedPlan().toString()
+    release_checkpoints(out)
     assert "Window" not in plan
     assert "CartesianProduct" not in plan
 
 
 def test_lpa_unpersists_scaffolding(spark):
-    from erddap2agol_spark.operators.dedup import release_checkpoints
+    from erddap2agol_spark.plans.lifecycle import release_checkpoints
 
     edges = spark.createDataFrame([(1, 2), (2, 3)], "a int, b int")
     base = _persistent_rdd_ids(spark)

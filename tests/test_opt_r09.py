@@ -15,7 +15,7 @@ import gc
 
 from pyspark.sql import functions as F
 
-from erddap2agol_spark.operators.dedup import release_checkpoints
+from erddap2agol_spark.plans.lifecycle import release_checkpoints
 from erddap2agol_spark.sources.tables import load_table
 
 SF = "/root/testdata/sf0.001"
@@ -82,7 +82,12 @@ def test_ensure_parallelism_sees_through_empty_splits(spark, tmp_path):
     single-row-group file floored to N splits has N-1 EMPTY partitions
     — the partition count passes the old check while every row sits on
     one core.  ensure_parallelism must consult the footers' row-group
-    count and repartition anyway."""
+    count and repartition anyway.  The test lowers maxPartitionBytes so
+    the file splits into at least the target number of ranges: the
+    partition-count check then passes and only the row-group check
+    (``_scan_units``) can catch the one-core layout."""
+    import os
+
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -108,8 +113,18 @@ def test_ensure_parallelism_sees_through_empty_splits(spark, tmp_path):
     assert nonempty == 1, "expected the single-row-group empty-split shape"
     assert _scan_units(df, _local_files(df), 3) == 1
     # ~10 MB of input derives the full defaultParallelism target
-    out = ensure_parallelism(df)
-    spread = sum(1 for s in out.rdd.glom().map(len).collect() if s)
+    target = spark.sparkContext.defaultParallelism
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(os.path.getsize(path) // (2 * target)))
+    try:
+        split = spark.read.parquet(str(tmp_path))
+        assert split.rdd.getNumPartitions() >= target
+        out = ensure_parallelism(split)
+        assert out is not split, "row-group check did not fire"
+        spread = sum(1 for s in out.rdd.glom().map(len).collect() if s)
+    finally:
+        spark.conf.set(key, prev)
     assert spread >= 3, "ensure_parallelism kept the one-core layout"
     # a shuffle-made partitioning is REAL: no second repartition
     wide = df.repartition(spark.sparkContext.defaultParallelism)

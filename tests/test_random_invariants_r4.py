@@ -14,6 +14,7 @@ from erddap2agol_spark.operators.graph import (
     pointer_doubling_closure,
 )
 from erddap2agol_spark.operators.joins import interval_overlap_join
+from erddap2agol_spark.plans.lifecycle import release_checkpoints
 
 
 def _py_root_depth(parents: dict[int, int | None]) -> dict[int, tuple[int, int]]:
@@ -60,10 +61,10 @@ def test_lpa_invariant_under_partitioning(spark):
     df = spark.createDataFrame(edges, "a int, b int")
 
     def run(parts):
-        out = label_propagation(
-            df.repartition(parts), iterations=3, persist_each=False
-        )
-        return sorted((r.node, r.label) for r in out.collect())
+        out = label_propagation(df.repartition(parts), iterations=3)
+        got = sorted((r.node, r.label) for r in out.collect())
+        release_checkpoints(out)
+        return got
 
     assert run(2) == run(16)
 

@@ -258,7 +258,7 @@ class TestSparseCosine:
     def test_no_cache_leak(self, spark):
         from erddap2agol_spark.operators.dedup import sparse_cosine_pairs
 
-        from erddap2agol_spark.operators.dedup import release_checkpoints
+        from erddap2agol_spark.plans.lifecycle import release_checkpoints
 
         base = _persistent_rdd_ids(spark)
         out = sparse_cosine_pairs(
@@ -370,7 +370,7 @@ def test_simhash_query_releases_scaffolding(spark):
     )
     new_ids = ids() - before
     assert len(new_ids) == 1  # result only; fingerprint table released
-    from erddap2agol_spark.operators.dedup import release_checkpoints
+    from erddap2agol_spark.plans.lifecycle import release_checkpoints
 
     release_checkpoints(out)  # r9: checkpoint-backed result
     assert not (ids() - before)

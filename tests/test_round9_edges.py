@@ -70,10 +70,8 @@ def test_iterative_rounds_release_previous(spark):
     checkpoint explicitly (truncate_lineage release chaining): after
     convergence only the FINAL round's blocks remain, releasable
     through the returned plan."""
-    from erddap2agol_spark.operators.dedup import (
-        connected_components,
-        release_checkpoints,
-    )
+    from erddap2agol_spark.operators.dedup import connected_components
+    from erddap2agol_spark.plans.lifecycle import release_checkpoints
 
     base = _persistent_rdd_ids(spark)
     # two chains + an isolated pair: converges in a few rounds
@@ -96,10 +94,10 @@ def test_near_dup_repeated_calls_reclaim_blocks(spark):
     happen under PySpark's default pinned-thread mode (measured r9:
     the py4j finalizer removes the JVM Dataset binding but the
     checkpointed RDD stays strongly rooted), so the contract is the
-    EXPLICIT one: dedup.release_checkpoints(result) after consuming
+    EXPLICIT one: release_checkpoints(result) after consuming
     each result leaves none of the call's persistent RDDs behind — >=3
     sequential calls, no new id surviving any of them."""
-    from erddap2agol_spark.operators.dedup import release_checkpoints
+    from erddap2agol_spark.plans.lifecycle import release_checkpoints
     from erddap2agol_spark.operators.similarity import cell_near_dup_pairs
 
     emb = load_table(spark, SF, "embeddings").withColumn("one_cell", F.lit(0))
@@ -144,8 +142,8 @@ def test_dedup_pipeline_cache_hygiene(spark):
     from erddap2agol_spark.operators.dedup import (
         connected_components,
         ngram_jaccard_pairs,
-        release_checkpoints,
     )
+    from erddap2agol_spark.plans.lifecycle import release_checkpoints
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
     base = _persistent_rdd_ids(spark)
@@ -166,10 +164,7 @@ def test_iterative_ops_shield_caller_input(spark):
     checkpoint, so round 1's release touches only that internal copy.
     A checkpoint-backed input (the new pair-builder contract) must stay
     readable after kcore and pointer doubling consume it."""
-    from erddap2agol_spark.operators.dedup import (
-        release_checkpoints,
-        truncate_lineage,
-    )
+    from erddap2agol_spark.plans.lifecycle import release_checkpoints, truncate_lineage
     from erddap2agol_spark.operators.graph import (
         kcore,
         pointer_doubling_closure,

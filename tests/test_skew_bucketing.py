@@ -202,6 +202,7 @@ def test_dedup_pair_builders_release_scaffolding(spark):
     the returned, already-materialized result — which the caller can
     release — so a full-registry sweep cannot accumulate scaffolding."""
     from erddap2agol_spark.operators import dedup
+    from erddap2agol_spark.plans.lifecycle import release_checkpoints
 
     docs = load_table(spark, SF, "documents").limit(200)
 
@@ -219,10 +220,10 @@ def test_dedup_pair_builders_release_scaffolding(spark):
     assert len(rdd_ids() - base) == 1  # result only; signature cache released
     # r9: results are checkpoint-backed (releasable), not
     # CacheManager-pinned persists (never GC-reclaimed)
-    dedup.release_checkpoints(out)
+    release_checkpoints(out)
     assert not (rdd_ids() - base)
 
     out2 = dedup.ngram_jaccard_pairs(docs, "doc_id", "text", max_doc_freq=100)
     assert len(rdd_ids() - base) == 1  # result only; shingle cache released
-    dedup.release_checkpoints(out2)
+    release_checkpoints(out2)
     assert not (rdd_ids() - base)

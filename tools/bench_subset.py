@@ -26,7 +26,7 @@ def time_queries(
 ) -> dict[str, list[float]]:
     """One untimed warm-up run of every spec in ``specs`` (name -> spec),
     then ``n_runs`` timed runs per spec; returns name -> run seconds."""
-    from erddap2agol_spark.operators.dedup import release_checkpoints
+    from erddap2agol_spark.plans.lifecycle import release_checkpoints
 
     for spec in specs.values():
         df = spec.spark(spark, sf_dir)

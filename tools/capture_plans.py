@@ -11,12 +11,14 @@ the judge checks claims against.
 Usage: python tools/capture_plans.py --tag r09 --suffix before [names...]
        (no names = the full bench HEADLINE list)
 
-For the ITERATIVE graph queries the terminal plan alone is vacuous —
-scaffolding materializes while the DataFrame is built, so the dump
-roots at a checkpoint (VERDICT r9 #4/#7).  For those, an additional
-``<name>_<suffix>_rounds.txt`` is written: the operator rebuilt with
-``persist_each=False`` — the pure-plan expansion in which the claimed
-per-round join strategies and exchange counts are actually visible.
+The pair builders (n-gram Jaccard, MinHash LSH) return an eager
+checkpoint, so their terminal plan roots at it.  For those, an
+additional ``<name>_<suffix>_rounds.txt`` is written: the pair plan
+rebuilt without the terminal checkpoint, in which the claimed join
+strategies and exchange counts are actually visible.  The iterative
+graph queries (pagerank, label propagation) need no second dump: their
+terminal plan shows every round above the checkpointed edge and degree
+leaves.
 """
 
 from __future__ import annotations
@@ -80,9 +82,9 @@ def main() -> int:
 
 def _rounds_form(spark, sf_dir: str, name: str):
     """The pre-checkpoint pure-plan expansion of a query whose returned
-    plan roots at a checkpoint (None for everything else): iterative
-    graph queries with persist_each=False, and the jaccard/LSH pair
-    builders with the terminal truncate_lineage left off."""
+    plan roots at a checkpoint (None for everything else): the
+    jaccard/LSH pair builders with the terminal truncate_lineage left
+    off."""
     from pyspark.sql import functions as F
 
     from erddap2agol_spark.sources.tables import load_table
@@ -114,32 +116,7 @@ def _rounds_form(spark, sf_dir: str, name: str):
             .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
             .distinct()
         )
-    if name not in ("pagerank_copurchase", "label_prop_communities"):
-        return None
-    from erddap2agol_spark.operators.graph import (
-        copurchase_edges,
-        label_propagation,
-        pagerank,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    if name == "pagerank_copurchase":
-        edges = copurchase_edges(li, "l_orderkey", "l_partkey")
-        pr = pagerank(
-            edges, a="pa", b="pb", iterations=5, damping=0.85,
-            persist_each=False, broadcast_ranks=True,
-        )
-        return (
-            pr.select("node", "deg", F.round("rank", 6).alias("pr"))
-            .orderBy(F.desc("pr"), "node")
-            .limit(20)
-        )
-    edges = copurchase_edges(li, "l_orderkey", "l_partkey", min_groups=2)
-    out = label_propagation(
-        edges, iterations=4, a="pa", b="pb",
-        persist_each=False, broadcast_labels=False,
-    )
-    return out.select("node", F.col("label").alias("community"))
+    return None
 
 
 if __name__ == "__main__":
