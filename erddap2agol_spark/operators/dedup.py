@@ -138,7 +138,6 @@ def lsh_candidate_pairs(
     n_perm: int = 8,
     rows_per_band: int = 2,
     shingle_n: int = 3,
-    n_salts: int = 1,
 ) -> DataFrame:
     """MinHash-LSH candidate pairs: band the signature, bucket-join on
     (band, band_signature), emit distinct (doc_a < doc_b) pairs.
@@ -147,16 +146,12 @@ def lsh_candidate_pairs(
     the bucket, so only same-bucket docs are compared. At 100 TB this is
     the only dedup strategy that doesn't quadratically explode.
 
-    ``n_salts > 1`` splits HOT BAND BUCKETS (boilerplate corpora collapse
-    many docs into one (band, band_sig) bucket, and that one reducer gets
-    the quadratic blow-up): the left side is salted by a deterministic
-    hash of the doc id, the right side replicated once per salt, and the
-    join key becomes (band, band_sig, salt) — every pair still meets
-    exactly once (in the left doc's salt cell), so the result is
-    IDENTICAL for any ``n_salts``; only the partitioning of the hot
-    bucket changes.  Replication multiplies the probe side rows by
-    ``n_salts`` — keep it single digits and reach for it only when a
-    bucket histogram shows heat.
+    A HOT band bucket (boilerplate corpora collapse many docs into one
+    (band, band_sig) bucket, and that one reducer gets the quadratic
+    blow-up) is split by the session's AQE skew-join handling
+    (``session.py``): the sort-merge join's oversized partition is cut
+    into several tasks at run time, with no salt column or replicated
+    probe side in the plan.
 
     Cache lifecycle (VERDICT r3 #3, pagerank pattern graph.py:142-146):
     the signature table is persisted only while this call materializes
@@ -182,21 +177,9 @@ def lsh_candidate_pairs(
             & (F.col("a.band_sig") == F.col("b.band_sig"))
             & (F.col("a.doc") < F.col("b.doc"))
         )
-        if n_salts > 1:
-            from .skew import deterministic_salt
-
-            a = bands.withColumn("__salt", deterministic_salt(F.col("doc"), n_salts))
-            b = bands.select(
-                "*",
-                F.explode(F.array(*[F.lit(i) for i in range(n_salts)])).alias("__salt"),
-            )
-            cond = cond & (F.col("a.__salt") == F.col("b.__salt"))
-            a, b = a.alias("a"), b.alias("b")
-        else:
-            a = bands.alias("a")
-            b = bands.alias("b")
         out = (
-            a.join(b, cond)
+            bands.alias("a")
+            .join(bands.alias("b"), cond)
             .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
             .distinct()
         )
@@ -240,83 +223,76 @@ def simhash16(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return votes.select("doc", fp.alias("simhash"))
 
 
-def simhash_near_pairs(
-    sh: DataFrame,
-    max_hamming: int = 2,
-    n_bits: int = 16,
-    id_col: str = "doc",
-    fp_col: str = "simhash",
-    strategy: str = "auto",
-    cross_threshold: int = 20_000,
-) -> DataFrame:
-    """All (doc_a < doc_b) pairs within ``max_hamming`` of their SimHash.
+#: Fingerprint-table size up to which simhash_near_pairs uses the
+#: cross (nested-loop) join; larger tables use the banded equi-join.
+SIMHASH_CROSS_MAX_DOCS = 20_000
 
-    Two physical strategies, same result:
 
-    - ``cross``: theta self-join (broadcast nested loop) + hamming filter.
-      Zero shuffle; wins while n^2/2 comparisons fit the cluster
-      (fingerprints are 8 bytes, the compare is two codegen'd ALU ops).
-    - ``banded``: split the fingerprint into ``max_hamming + 1`` disjoint
-      bit bands — by pigeonhole, two fingerprints differing in
-      <= max_hamming bits agree on at least one whole band — equi-join on
-      (band, band_bits), verify with ``bit_count(xor)``. Candidates only
-      meet inside a band bucket: this is what survives a
-      billion-document corpus, where the cross product never runs.
+def simhash_near_pairs(sh: DataFrame, max_hamming: int = 2) -> DataFrame:
+    """All (doc_a < doc_b) pairs within ``max_hamming`` of their SimHash,
+    over :func:`simhash16`'s ``(doc, simhash)`` table.
 
-    ``auto`` counts the (usually persisted, tiny) fingerprint table and
-    picks cross below ``cross_threshold`` docs — the count is one cheap
-    aggregate, nothing next to either join.
+    Two physical strategies, same result, chosen by the table's row
+    count (one cheap aggregate over a usually persisted, tiny table,
+    nothing next to either join): :func:`_simhash_cross_pairs` up to
+    :data:`SIMHASH_CROSS_MAX_DOCS` docs, :func:`_simhash_banded_pairs`
+    above.
     """
-    if strategy == "auto":
-        strategy = "cross" if sh.count() <= cross_threshold else "banded"
-    if strategy == "cross":
-        a, b = sh.alias("a"), sh.alias("b")
-        return (
-            a.join(b, F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            .select(
-                F.col(f"a.{id_col}").alias("doc_a"),
-                F.col(f"b.{id_col}").alias("doc_b"),
-                F.bit_count(
-                    F.col(f"a.{fp_col}").bitwiseXOR(F.col(f"b.{fp_col}"))
-                ).alias("hamming"),
-            )
-            .filter(F.col("hamming") <= max_hamming)
-        )
+    if sh.count() <= SIMHASH_CROSS_MAX_DOCS:
+        return _simhash_cross_pairs(sh, max_hamming)
+    return _simhash_banded_pairs(sh, max_hamming)
+
+
+def _hamming_pairs(joined: DataFrame, max_hamming: int) -> DataFrame:
+    """``(doc_a, doc_b, hamming)`` of a joined ``a``/``b`` fingerprint
+    pair, kept within ``max_hamming``."""
+    return joined.select(
+        F.col("a.doc").alias("doc_a"),
+        F.col("b.doc").alias("doc_b"),
+        F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).alias(
+            "hamming"
+        ),
+    ).filter(F.col("hamming") <= max_hamming)
+
+
+def _simhash_cross_pairs(sh: DataFrame, max_hamming: int) -> DataFrame:
+    """Theta self-join (broadcast nested loop) + hamming filter.  Zero
+    shuffle; wins while n^2/2 comparisons fit the cluster (fingerprints
+    are 8 bytes, the compare is two codegen'd ALU ops)."""
+    a, b = sh.alias("a"), sh.alias("b")
+    return _hamming_pairs(a.join(b, F.col("a.doc") < F.col("b.doc")), max_hamming)
+
+
+def _simhash_banded_pairs(sh: DataFrame, max_hamming: int) -> DataFrame:
+    """Split the 16-bit fingerprint into ``max_hamming + 1`` disjoint bit
+    bands — by pigeonhole, two fingerprints differing in <= max_hamming
+    bits agree on at least one whole band — equi-join on (band,
+    band_bits), verify with ``bit_count(xor)``.  Candidates only meet
+    inside a band bucket: this is what survives a billion-document
+    corpus, where the cross product never runs."""
     n_bands = max_hamming + 1
-    base, extra = divmod(n_bits, n_bands)
+    base, extra = divmod(16, n_bands)
     offsets, off = [], 0
     for i in range(n_bands):
         size = base + (1 if i < extra else 0)
         offsets.append((off, size))
         off += size
     stack_args = ", ".join(
-        f"{i}, (shiftright({fp_col}, {o}) & {(1 << s) - 1})"
+        f"{i}, (shiftright(simhash, {o}) & {(1 << s) - 1})"
         for i, (o, s) in enumerate(offsets)
     )
     bands = sh.selectExpr(
-        f"{id_col} AS doc",
-        fp_col,
-        f"stack({n_bands}, {stack_args}) AS (band, band_bits)",
+        "doc", "simhash", f"stack({n_bands}, {stack_args}) AS (band, band_bits)"
     )
     a = bands.alias("a")
     b = bands.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_bits") == F.col("b.band_bits"))
-            & (F.col("a.doc") < F.col("b.doc")),
-        )
-        .select(
-            F.col("a.doc").alias("doc_a"),
-            F.col("b.doc").alias("doc_b"),
-            F.bit_count(
-                F.col(f"a.{fp_col}").bitwiseXOR(F.col(f"b.{fp_col}"))
-            ).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
+    joined = a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.band_bits") == F.col("b.band_bits"))
+        & (F.col("a.doc") < F.col("b.doc")),
     )
+    return _hamming_pairs(joined, max_hamming).distinct()
 
 
 def _shingle_rows(
@@ -891,14 +867,14 @@ def jaccard_prefix_pairs(
         return truncate_lineage(out)
 
 
+#: Mean pair fan-out per posting row (``sum(df^2) / sum(df)``) above
+#: which jaccard_pairs_auto takes the prefix join (see
+#: :func:`jaccard_regime_probe`).
+PREFIX_FANOUT_THRESHOLD = 64.0
+
+
 def jaccard_regime_probe(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int = 3,
-    fanout_threshold: float = 64.0,
-    sample_rate: float | None = None,
-    _prebuilt_sh: DataFrame | None = None,
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int = 3
 ) -> str:
     """Pick the set-similarity join strategy from the corpus's document-
     frequency profile: ``"posting"`` (``ngram_jaccard_pairs``) or
@@ -912,66 +888,20 @@ def jaccard_regime_probe(
     BENCH_NOTES r4 regime note). Under boilerplate skew — web shingles
     with df in the millions — the ratio explodes while prefix filtering
     never joins on those keys, so prefix wins. The crossover is broad;
-    64 sits comfortably inside it (a posting row expecting >64 partners
-    is already fan-out-bound, while prefix overgeneration costs ~100x
-    constant work).
-
-    The probe is ONE hash aggregate over the shingle explode reduced to
-    a single driver-side row — a plan-time statistics read (what AQE
-    does with shuffle stats), not a data path; the scalar never joins
-    row data.
-
-    ``sample_rate`` (0 < r <= 1) makes that pass a deterministic
-    hash-sampled one — the 100 TB knob, since an exact probe is itself a
-    full corpus scan. Under doc-sampling at rate r a shingle's df
-    thins binomially (E[df_s] = r*df), so the fan-out ratio thins by
-    ~r for the hot shingles that decide the regime; the probe divides
-    the sampled ratio by r before comparing. The hash gate (md5 of the
-    doc id) is bit-stable across runs and engines.
+    :data:`PREFIX_FANOUT_THRESHOLD` (64) sits comfortably inside it (a
+    posting row expecting >64 partners is already fan-out-bound, while
+    prefix overgeneration costs ~100x constant work).
     """
-    if _prebuilt_sh is not None and sample_rate is None:
-        # shared-explode path (jaccard_pairs_auto): aggregate document
-        # frequency over the caller's cached (doc, n_sh, sh) relation
-        # instead of re-running the corpus shingle explode — the probe
-        # becomes the cache-fill job of the relation the join reads
-        # anyway (guide §2.4: two operations keyed the same way share
-        # one evaluation).
-        row = (
-            _prebuilt_sh.groupBy("sh")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .agg(
-                F.sum(F.col("df")).alias("n"),
-                F.sum(F.col("df") * F.col("df")).alias("p"),
-            )
-            .first()
-        )
-        if not row or not row["n"]:
-            return "posting"
-        return "prefix" if row["p"] / row["n"] > fanout_threshold else "posting"
-    src = ensure_parallelism(df)
-    eff_rate = None
-    if sample_rate is not None:
-        if not 0 < sample_rate <= 1:
-            raise ValueError("sample_rate must be in (0, 1]")
-        # 2^30 buckets over a 32-bit hash: 2^32 / 2^30 divides evenly, so
-        # the gate is unbiased, and the resolution floor is ~1e-9. The
-        # fan-out correction divides by the EFFECTIVE (quantized) rate,
-        # not the requested one, so quantization cannot skew the ratio.
-        buckets = round(sample_rate * (1 << 30))
-        if buckets < 1:
-            raise ValueError(
-                f"sample_rate={sample_rate} is below the 2^-30 gate "
-                "resolution — it would sample nothing"
-            )
-        eff_rate = buckets / (1 << 30)
-        gate = F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10)
-        src = src.filter(gate.cast("long") % (1 << 30) < buckets)
-    posting = src.select(
-        F.col(id_col).alias("doc"),
-        F.explode(word_shingles(F.col(text_col), shingle_n)).alias("g"),
-    )
+    return _fanout_regime(_shingle_rows(df, id_col, text_col, shingle_n))
+
+
+def _fanout_regime(sh: DataFrame) -> str:
+    """The probe proper: ONE hash aggregate over ``(doc, n_sh, sh)``
+    shingle rows reduced to a single driver-side row — a plan-time
+    statistics read (what AQE does with shuffle stats), not a data
+    path; the scalar never joins row data."""
     row = (
-        posting.groupBy("g")
+        sh.groupBy("sh")
         .agg(F.count(F.lit(1)).alias("df"))
         .agg(
             F.sum(F.col("df")).alias("n"),
@@ -980,19 +910,8 @@ def jaccard_regime_probe(
         .first()
     )
     if not row or not row["n"]:
-        return "posting"  # empty corpus (or empty sample): cheap default
-    ratio = row["p"] / row["n"]
-    if eff_rate is not None:
-        # Undo the binomial df thinning. Under doc sampling at rate r,
-        # E[df_s] = r*df and E[df_s^2] = r^2*df^2 + r(1-r)*df, so
-        # E[sum(df_s^2)/sum(df_s)] ~ r*ratio + (1-r): a plain `/ r`
-        # over-corrects by (1-r)/r — at r=1% that alone is ~99, which
-        # dispatches a perfectly uniform corpus (true ratio ~1) to the
-        # ~40x-slower prefix regime (ADVICE r5). Subtract the additive
-        # thinning term first, then rescale; the true ratio is >= 1 by
-        # Cauchy-Schwarz, so clamp there.
-        ratio = max(1.0, (ratio - (1.0 - eff_rate)) / eff_rate)
-    return "prefix" if ratio > fanout_threshold else "posting"
+        return "posting"  # empty corpus: cheap default
+    return "prefix" if row["p"] / row["n"] > PREFIX_FANOUT_THRESHOLD else "posting"
 
 
 def jaccard_pairs_auto(
@@ -1001,68 +920,48 @@ def jaccard_pairs_auto(
     text_col: str,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    fanout_threshold: float = 64.0,
-    probe_sample_rate: float | None = None,
 ) -> DataFrame:
     """Exact Jaccard pairs with AUTOMATIC regime selection (VERDICT r4
     #2: the sum(df^2) probe promoted from a docstring note to a
     dispatching operator — a user no longer picks the wrong regime
     silently).
 
-    Runs :func:`jaccard_regime_probe`, then dispatches to the posting
-    join (near-uniform df) or the PPJoin prefix join (skewed df). Both
-    branches return the same contract ``(doc_a, doc_b, jaccard)`` with
-    identical integer-ratio-exact scores at the same threshold (the
-    prefix branch's extra bookkeeping columns are projected away).
+    Runs the :func:`jaccard_regime_probe` aggregate, then dispatches to
+    the posting join (near-uniform df) or the PPJoin prefix join
+    (skewed df). Both branches return the same contract ``(doc_a,
+    doc_b, jaccard)`` with identical integer-ratio-exact scores at the
+    same threshold (the prefix branch's extra bookkeeping columns are
+    projected away).
 
-    ``probe_sample_rate`` passes through to the probe — at corpus scale
-    set it so the regime decision costs a sampled pass, not a second
-    full shingle aggregate on top of the join itself.
-
-    Shared explode (r9, SIZE-GATED r10 per ADVICE r9): with an EXACT
-    probe (``probe_sample_rate`` None) on a SMALL corpus
-    (:data:`SHARED_EXPLODE_MAX_BYTES`), the shingle explode is built
-    once, persisted SERIALIZED, aggregated by the probe (filling the
-    cache), and — in the posting regime — fed straight to the pair
+    Shared explode (r9, SIZE-GATED r10 per ADVICE r9): on a SMALL
+    corpus (:data:`SHARED_EXPLODE_MAX_BYTES`), the shingle explode is
+    built once, persisted SERIALIZED, aggregated by the probe (filling
+    the cache), and — in the posting regime — fed straight to the pair
     join, which reads the cache instead of re-exploding the corpus.
-    Past the gate the probe aggregates over the UNPERSISTED explode:
-    on a boilerplate-skewed web corpus — exactly where the probe picks
-    'prefix' and the explode is at its largest — the old unconditional
-    persist materialized the entire posting relation into executor
-    storage just to compute a two-scalar aggregate, then dropped it.
-    A large posting corpus pays one extra explode pass instead (cache
-    only what is certain to be reused — guide §5).  With a sampled
-    probe the explode is sample-gated and cannot be reused; the join
-    rebuilds it, exactly as before.
+    Past the gate, or when the input size is unknown, the probe
+    aggregates over the UNPERSISTED explode: on a boilerplate-skewed
+    web corpus — exactly where the probe picks 'prefix' and the explode
+    is at its largest — an unconditional persist materialized the
+    entire posting relation into executor storage just to compute a
+    two-scalar aggregate, then dropped it.  A large posting corpus pays
+    one extra explode pass instead (cache only what is certain to be
+    reused — guide §5).
     """
-    if probe_sample_rate is None:
-        size = input_bytes(df)
-        if size is not None and size <= SHARED_EXPLODE_MAX_BYTES:
-            # serialized blocks: the exploded posting relation is the
-            # biggest thing this operator ever stores; the deserialized
-            # default costs several x the footprint for one re-read
-            with pinned(
-                _shingle_rows(df, id_col, text_col, shingle_n),
-                StorageLevel.MEMORY_AND_DISK,
-            ) as sh:
-                regime = jaccard_regime_probe(
-                    df, id_col, text_col, shingle_n=shingle_n,
-                    fanout_threshold=fanout_threshold, _prebuilt_sh=sh,
-                )
-                if regime == "posting":
-                    return truncate_lineage(_posting_pairs_from(sh, threshold))
-            return jaccard_prefix_pairs(
-                df, id_col, text_col, shingle_n=shingle_n, threshold=threshold
-            ).select("doc_a", "doc_b", "jaccard")
-        probe_sample_rate = 1.0  # exact probe, unpersisted explode
-    regime = jaccard_regime_probe(
-        df, id_col, text_col, shingle_n=shingle_n,
-        fanout_threshold=fanout_threshold, sample_rate=probe_sample_rate,
-    )
-    if regime == "prefix":
-        return jaccard_prefix_pairs(
+    size = input_bytes(df)
+    if size is not None and size <= SHARED_EXPLODE_MAX_BYTES:
+        # serialized blocks: the exploded posting relation is the
+        # biggest thing this operator ever stores; the deserialized
+        # default costs several x the footprint for one re-read
+        with pinned(
+            _shingle_rows(df, id_col, text_col, shingle_n),
+            StorageLevel.MEMORY_AND_DISK,
+        ) as sh:
+            if _fanout_regime(sh) == "posting":
+                return truncate_lineage(_posting_pairs_from(sh, threshold))
+    elif jaccard_regime_probe(df, id_col, text_col, shingle_n) == "posting":
+        return ngram_jaccard_pairs(
             df, id_col, text_col, shingle_n=shingle_n, threshold=threshold
-        ).select("doc_a", "doc_b", "jaccard")
-    return ngram_jaccard_pairs(
+        )
+    return jaccard_prefix_pairs(
         df, id_col, text_col, shingle_n=shingle_n, threshold=threshold
-    )
+    ).select("doc_a", "doc_b", "jaccard")

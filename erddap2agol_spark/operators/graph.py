@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.lifecycle import pinned, truncate_lineage
+from ..plans.lifecycle import pinned, release_checkpoints, truncate_lineage
 from ..plans.parallelism import COPURCHASE_FANOUT_WEIGHT, fanout_width, loop_width
 
 
@@ -155,14 +155,30 @@ def copurchase_edges(
     return per_pair.select(a, b)
 
 
+#: Largest |V| whose per-round rank/label vector pagerank and
+#: label_propagation broadcast (4M rows of (id, double) ≈ 64 MB);
+#: broadcasting a billion-node vector would be the scale bug.
+BROADCAST_NODES_MAX = 4_000_000
+
+
+def _broadcast_rounds(n_nodes: int, n_sym: int) -> bool:
+    """The |V| probe's regime rule for the iterative graph operators:
+    broadcast the per-round |V|-row vector when it fits
+    :data:`BROADCAST_NODES_MAX` and the graph is edge-heavy (average
+    degree >= 8, ``n_sym`` = 2|E|).  Broadcast only buys when the
+    per-round edge shuffle it removes dominates the per-round vector
+    collect+broadcast it adds (interleaved A/B on the sf0.1 co-purchase
+    graphs: the avg-deg ~3 LPA graph is a wash, the avg-deg ~120
+    pagerank graph is 2x)."""
+    return n_nodes <= BROADCAST_NODES_MAX and n_sym >= 8 * n_nodes
+
+
 def pagerank(
     edges: DataFrame,
     a: str = "a",
     b: str = "b",
     iterations: int = 5,
     damping: float = 0.85,
-    broadcast_ranks: bool | None = None,
-    broadcast_nodes_max: int = 4_000_000,
 ) -> DataFrame:
     """Fixed-iteration PageRank on an undirected edge list (each edge
     once, any orientation).  Returns ``(node, deg, rank)``.
@@ -199,23 +215,20 @@ def pagerank(
     The round-k rank vectors form a linear chain, each consumed exactly
     once by round k+1, so materializing them buys nothing.
 
-    ``broadcast_ranks`` regime (None = probe |V| against
-    ``broadcast_nodes_max``): the rank vector is |V| rows of
-    (id, double) — tiny next to the edge list on any real graph — so
-    when it fits a broadcast, each round becomes a map-side broadcast
-    join against ``g`` PRE-PARTITIONED BY dst, and the contribution
-    aggregate (keyed on dst) reuses that partitioning with NO exchange:
-    the edge list is shuffled exactly once for ALL rounds instead of
-    once per round (measured 16.5 s -> 6.0 s warm on the sf0.1
-    co-purchase graph, |V|=200k).  Past ``broadcast_nodes_max`` (4M
-    rows ≈ 64 MB default) the co-partitioned equi-join form is kept —
-    broadcasting a billion-node rank vector would be the scale bug.
-    With the probe confirming |V| fits, ``deg`` joins in by explicit
-    broadcast too (a LogicalRDD has no stats, so the planner would
-    otherwise sort-merge the |E|-row side against |V| rows).
+    Regime (:func:`_broadcast_rounds` on the probed |V| and |E|): the
+    rank vector is |V| rows of (id, double) — tiny next to the edge
+    list on any real graph — so when it fits a broadcast, each round
+    becomes a map-side broadcast join against ``g`` PRE-PARTITIONED BY
+    dst, and the contribution aggregate (keyed on dst) reuses that
+    partitioning with NO exchange: the edge list is shuffled exactly
+    once for ALL rounds instead of once per round (measured 16.5 s ->
+    6.0 s warm on the sf0.1 co-purchase graph, |V|=200k).  Otherwise
+    the co-partitioned equi-join form is kept.  In the broadcast regime
+    ``deg`` joins in by explicit broadcast too (a LogicalRDD has no
+    stats, so the planner would otherwise sort-merge the |E|-row side
+    against |V| rows).  An empty graph returns an empty
+    ``(node, deg, rank)`` frame.
     """
-    nparts = None
-    n_known: int | None = None
     # build the edge list ONCE per call: ``sym`` is a union of two
     # selects of ``edges``, so every evaluation of sym runs the
     # caller's edge build TWICE (guide §2.4 duplicated subtree).
@@ -226,22 +239,22 @@ def pagerank(
     deg = truncate_lineage(
         sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     )
-    if broadcast_ranks is None:
-        # regime probe: this reads the |V|-row deg CHECKPOINT (a
-        # trivial job — r9 paid a dedicated edge-build pass here), plus
-        # the avg-degree gate shared with label_propagation — broadcast
-        # only buys when the removed per-round edge shuffle dominates
-        # the added per-round rank collect+broadcast
-        n_nodes, n_sym = deg.agg(
-            F.count(F.lit(1)), F.coalesce(F.sum("deg"), F.lit(0))
-        ).collect()[0]  # n_sym = 2|E|
-        broadcast_ranks = (
-            n_nodes <= broadcast_nodes_max and n_sym >= 8 * n_nodes
+    # regime probe: this reads the |V|-row deg CHECKPOINT (a trivial
+    # job — r9 paid a dedicated edge-build pass here)
+    n_nodes, n_sym = deg.agg(
+        F.count(F.lit(1)), F.coalesce(F.sum("deg"), F.lit(0))
+    ).collect()[0]  # n_sym = 2|E|
+    if not n_nodes:
+        release_checkpoints(edges)
+        return deg.select(
+            F.col("src").alias("node"),
+            "deg",
+            F.lit(None).cast("double").alias("rank"),
         )
-        n_known = int(n_nodes)
-        # scale-adaptive loop compaction (plans.parallelism.loop_width):
-        # size the per-round relation's task count from the measured n_sym
-        nparts = loop_width(n_sym, deg)
+    broadcast = _broadcast_rounds(n_nodes, n_sym)
+    # scale-adaptive loop compaction (plans.parallelism.loop_width):
+    # size the per-round relation's task count from the measured n_sym
+    nparts = loop_width(n_sym, deg)
     # deg RIDES the edge relation (the oracle's own ``g`` shape,
     # re-adopted r10 after an interleaved A/B + event-log profile —
     # fresh-session run walls 13.9/7.2/5.7/5.3 s vs the r9/r10
@@ -255,17 +268,15 @@ def pagerank(
     # BroadcastHashJoin + stage boundary PER ROUND — pure sequential
     # driver latency (guide §1.2: the shape of the job beats
     # per-stage byte counts).
-    # int32 deg on the edge relation when the probe chose the
-    # broadcast regime (guide §2.3 narrower types): deg <= |V|, and the
-    # probe measured |V| to fit a broadcast relation (hard cap 512M
-    # rows), so deg < 2^31 provably; int->double promotion in the
-    # round's division is exact, identical IEEE quotient.  A
-    # caller-forced broadcast_ranks never measured |V|, so it keeps
-    # the long, as does the equi-join regime.
+    # int32 deg on the edge relation in the broadcast regime (guide
+    # §2.3 narrower types): deg <= |V|, and the probe measured |V| to
+    # fit a broadcast relation (hard cap 512M rows), so deg < 2^31
+    # provably; int->double promotion in the round's division is exact,
+    # identical IEEE quotient.  The equi-join regime keeps the long.
     dcol = deg.select(
         "src", F.col("deg").cast("int").alias("deg")
-    ) if broadcast_ranks and n_known is not None else deg.select("src", "deg")
-    g = sym.join(F.broadcast(dcol) if broadcast_ranks else dcol, "src")
+    ) if broadcast else deg.select("src", "deg")
+    g = sym.join(F.broadcast(dcol) if broadcast else dcol, "src")
     # Materialize g BEFORE the dst repartition, and repartition
     # IN-QUERY over the checkpoint (restructured r10, twice):
     # (a) a localCheckpoint under AQE erases physical partitioning —
@@ -290,60 +301,43 @@ def pagerank(
     # the edge checkpoint has no reader once g and deg are materialized
     # and is freed HERE.
     g = truncate_lineage(g, release=edges)
-    if broadcast_ranks or nparts:
+    if broadcast or nparts:
         g = (
             g.repartition(nparts, F.col("dst"))
             if nparts
             else g.repartition(F.col("dst"))
         )
-    if n_known:  # n_known == 0 (empty graph) keeps the column form
-        # |V| was collected by the regime probe, so fold it in as a
-        # LITERAL: the ``crossJoin(n)`` form re-evaluates the 1-row
-        # count subplan as a separate broadcast build on EVERY round
-        # (exchange reuse does not span the per-round broadcast
-        # jobs), one avoidable job + stage per iteration.  Same IEEE
-        # doubles — 1.0/n and (1-d)/n are computed with the identical
-        # double-division the column expression performed.
-        inv_n = F.lit(1.0 / n_known)
-        base_term = F.lit((1.0 - damping) / n_known)
-        # NO round-1 constant fold (removed r10): folding rank_0 into a
-        # per-edge map over g gave round 1 a canonically DIFFERENT g
-        # projection from rounds 2+, so the shared g exchange was
-        # computed TWICE (measured: concurrent 30.7 MB and 20.1 MB
-        # shuffles of the same base).  A uniform round shape keeps ONE
-        # reusable g relation; round 1's vector build costs a |V|-row
-        # scan of the deg checkpoint, not a g pass.
-        ranks = deg.select(F.col("src").alias("node"), inv_n.alias("rank"))
-    else:
-        n = deg.agg(F.count(F.lit(1)).alias("n"))  # 1 row, auto-broadcast
-        ranks = deg.crossJoin(n).select(
-            F.col("src").alias("node"), (F.lit(1.0) / F.col("n")).alias("rank")
-        )
+    # |V| was collected by the regime probe, so it folds in as a
+    # LITERAL: a ``crossJoin(n)`` column form would re-evaluate the
+    # 1-row count subplan as a separate broadcast build on EVERY round
+    # (exchange reuse does not span the per-round broadcast jobs), one
+    # avoidable job + stage per iteration.
+    inv_n = F.lit(1.0 / n_nodes)
+    base_term = F.lit((1.0 - damping) / n_nodes)
+    # NO round-1 constant fold (removed r10): folding rank_0 into a
+    # per-edge map over g gave round 1 a canonically DIFFERENT g
+    # projection from rounds 2+, so the shared g exchange was
+    # computed TWICE (measured: concurrent 30.7 MB and 20.1 MB
+    # shuffles of the same base).  A uniform round shape keeps ONE
+    # reusable g relation; round 1's vector build costs a |V|-row
+    # scan of the deg checkpoint, not a g pass.
+    ranks = deg.select(F.col("src").alias("node"), inv_n.alias("rank"))
     dside = deg.select(F.col("src").alias("node"), "deg")
-    for it in range(iterations):
+    for _ in range(iterations):
         # division on the edge side, exactly the oracle's
         # sum(r.rank/g.deg): identical two doubles divided per edge,
         # identical per-group sum
-        r = F.broadcast(ranks) if broadcast_ranks else ranks
+        r = F.broadcast(ranks) if broadcast else ranks
         contrib = g.join(r, g.src == r.node).select(
             F.col("dst").alias("node"),
             (F.col("rank") / F.col("deg")).alias("c"),
         )
         s = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        if n_known:
-            ranks = s.select(
-                "node", (base_term + F.lit(damping) * F.col("s")).alias("rank")
-            )
-        else:
-            ranks = s.crossJoin(n).select(
-                "node",
-                (
-                    F.lit((1.0 - damping)) / F.col("n")
-                    + F.lit(damping) * F.col("s")
-                ).alias("rank"),
-            )
+        ranks = s.select(
+            "node", (base_term + F.lit(damping) * F.col("s")).alias("rank")
+        )
     out = ranks.join(
-        F.broadcast(dside) if broadcast_ranks else dside, "node"
+        F.broadcast(dside) if broadcast else dside, "node"
     ).select("node", "deg", "rank")
     # LAZY return: 5 unrolled rounds over the g/deg checkpoints are a
     # bounded-depth plan — the caller's action computes them once, and
@@ -410,8 +404,6 @@ def label_propagation(
     iterations: int,
     a: str = "a",
     b: str = "b",
-    broadcast_labels: bool | None = None,
-    broadcast_nodes_max: int = 4_000_000,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et
     al. 2007, deterministic variant): every node starts labeled with its
@@ -434,7 +426,7 @@ def label_propagation(
     checkpoint); the chain itself needs no checkpointing at these
     depths and the returned plan is lazy over that checkpoint.
 
-    ``broadcast_labels`` regime (None = probe |V|, same dispatch as
+    Regime (the |V| probe and :func:`_broadcast_rounds`, as in
     :func:`pagerank`): the label frame is |V| rows, so when it fits a
     broadcast each round is a map-side join against the dst-partitioned
     edge list and BOTH aggregates reuse that partitioning exchange-free
@@ -450,27 +442,18 @@ def label_propagation(
     sym = edges.select(F.col(a).alias("src"), F.col(b).alias("dst")).unionAll(
         edges.select(F.col(b).alias("src"), F.col(a).alias("dst"))
     )
-    nparts = None
-    if broadcast_labels is None:
-        # Probe over the checkpointed edge list (trivial next to the
-        # edge build it used to re-run).  Broadcast pays only when the
-        # per-round edge shuffle it removes dwarfs the per-round label
-        # collect+broadcast it adds: require an edge-heavy graph (avg
-        # degree >= 8; interleaved A/B on the sf0.1 co-purchase graphs:
-        # avg-deg ~3 LPA graph is a wash, avg-deg ~120 pagerank graph
-        # is 2x) on a broadcastable |V|.
-        n_nodes, n_sym = sym.agg(
-            F.countDistinct("src"), F.count(F.lit(1))
-        ).collect()[0]
-        broadcast_labels = (
-            n_nodes <= broadcast_nodes_max and n_sym >= 8 * n_nodes
-        )
-        # scale-adaptive loop compaction: the probe's n_sym prices the
-        # rounds — a small graph iterated at full-cluster granularity is
-        # pure task-launch floor (plans.parallelism.loop_width).  None =
-        # big graph, keep ambient parallelism.
-        nparts = loop_width(n_sym, sym)
-    if broadcast_labels or nparts:
+    # Probe over the checkpointed edge list (trivial next to the edge
+    # build it used to re-run).
+    n_nodes, n_sym = sym.agg(
+        F.countDistinct("src"), F.count(F.lit(1))
+    ).collect()[0]
+    broadcast = _broadcast_rounds(n_nodes, n_sym)
+    # scale-adaptive loop compaction: the probe's n_sym prices the
+    # rounds — a small graph iterated at full-cluster granularity is
+    # pure task-launch floor (plans.parallelism.loop_width).  None =
+    # big graph, keep ambient parallelism.
+    nparts = loop_width(n_sym, sym)
+    if broadcast or nparts:
         # dst-partitioned form for the rounds: in broadcast mode both
         # per-round aggregates reuse HashPartitioning(dst)
         # exchange-free; in the compacted equi-join mode it shrinks
@@ -489,7 +472,7 @@ def label_propagation(
     )
     for _ in range(iterations):
         # neighbor label counts: edge (src -> dst) carries src's label to dst
-        lbl = F.broadcast(labels) if broadcast_labels else labels
+        lbl = F.broadcast(labels) if broadcast else labels
         cnt = (
             sym.join(lbl, sym.src == lbl.node)
             .groupBy(F.col("dst").alias("node"), F.col("label"))

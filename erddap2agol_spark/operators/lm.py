@@ -363,13 +363,12 @@ def bpe_merge_rounds(docs: DataFrame, text_col: str, top_per_round: int = 10) ->
 #: binary, DuckDB UTF-8 binary), so tie-breaks agree.
 BPE_SENTINEL_BASE = 0xE000
 
+#: Merge rounds between two vocabulary checkpoints in the BPE trainer:
+#: bounds the replace-chain plan depth.
+BPE_CHECKPOINT_EVERY = 16
 
-def bpe_train(
-    docs: DataFrame,
-    text_col: str,
-    n_merges: int,
-    checkpoint_every: int = 16,
-) -> DataFrame:
+
+def bpe_train(docs: DataFrame, text_col: str, n_merges: int) -> DataFrame:
     """Train a FULL ``n_merges``-row BPE merge table (Sennrich et al.
     2016) — the generalized form of :func:`bpe_merge_rounds`'s two
     hardcoded rounds, completing the tokenizer-training lifecycle.
@@ -399,12 +398,12 @@ def bpe_train(
     ``ann_ivf``), and learning merge ``k+1`` requires merge ``k`` by
     definition — the collect is the algorithm's sequential dependency,
     not a missed parallelism.  Replace-chain plan depth is bounded by
-    ``checkpoint_every`` via the ``truncate_lineage`` release chain
+    :data:`BPE_CHECKPOINT_EVERY` via the ``truncate_lineage`` release chain
     (kcore's discipline); the input plan is shielded by the initial
     internal re-root, and the last internal checkpoint is released
     before return — callers never hold engine-private blocks.
     """
-    rows, _, _ = _bpe_train_rows(docs, text_col, n_merges, checkpoint_every)
+    rows, _, _ = _bpe_train_rows(docs, text_col, n_merges)
     return docs.sparkSession.createDataFrame(rows, _BPE_OUT_SCHEMA)
 
 
@@ -418,7 +417,6 @@ def _bpe_train_rows(
     docs: DataFrame,
     text_col: str,
     n_merges: int,
-    checkpoint_every: int,
     keep_vocab: bool = False,
 ) -> tuple[list[tuple], list[str], DataFrame | None]:
     """bpe_train's engine: returns (output rows, raw merge pairs,
@@ -467,7 +465,7 @@ def _bpe_train_rows(
                 F.replace(F.col("tok"), F.lit(pair), F.lit(sent)).alias("tok"),
                 "c",
             )
-            if k % checkpoint_every == 0:
+            if k % BPE_CHECKPOINT_EVERY == 0:
                 # a kept vocab0 is caller-owned: never release it here
                 rel = None if (keep_vocab and cur_ckpt is vocab0) else cur_ckpt
                 vocab = truncate_lineage(vocab, release=rel)
@@ -496,7 +494,6 @@ def bpe_symbol_histogram(
     text_col: str,
     n_merges: int,
     top: int = 20,
-    checkpoint_every: int = 16,
 ) -> DataFrame:
     """Tokenize the corpus under a freshly trained ``n_merges``-rank BPE
     merge table and report the ``top`` most frequent SYMBOLS (merged
@@ -521,7 +518,7 @@ def bpe_symbol_histogram(
     (the same terminal-result contract as the near-dup operators).
     """
     rows, raw_pairs, vocab = _bpe_train_rows(
-        docs, text_col, n_merges, checkpoint_every, keep_vocab=True
+        docs, text_col, n_merges, keep_vocab=True
     )
     enc = F.col("tok")
     for k, pair in enumerate(raw_pairs, start=1):
@@ -558,11 +555,7 @@ def bpe_symbol_histogram(
 
 
 def bpe_doc_token_counts(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    n_merges: int,
-    checkpoint_every: int = 16,
+    docs: DataFrame, id_col: str, text_col: str, n_merges: int
 ) -> DataFrame:
     """Per-DOCUMENT token counts under a freshly trained
     ``n_merges``-rank BPE merge table — the corpus-scale tokenization
@@ -583,7 +576,7 @@ def bpe_doc_token_counts(
     it via ``plans.lifecycle.release_checkpoints`` when done.
     """
     _, raw_pairs, vocab = _bpe_train_rows(
-        docs, text_col, n_merges, checkpoint_every, keep_vocab=True
+        docs, text_col, n_merges, keep_vocab=True
     )
     enc = F.col("tok")
     for k, pair in enumerate(raw_pairs, start=1):

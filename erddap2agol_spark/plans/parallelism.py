@@ -20,6 +20,7 @@ Each costs a plan walk and driver-side file stats, never a job.
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame
 
@@ -84,7 +85,9 @@ def _width(amount: int, per_task: int, cap: int) -> int:
 
 def _local_files(df: DataFrame) -> list[str] | None:
     """Local paths of the files behind ``df``'s scan, or None when the
-    plan has no file scan or any file is remote (not locally stat-able)."""
+    plan has no file scan or any file is remote (not locally stat-able).
+    ``file:`` URIs are percent-escaped (a space reads ``%20``) and are
+    decoded; a bare path is taken as is."""
     try:
         uris = df.inputFiles()
     except Exception:
@@ -93,14 +96,13 @@ def _local_files(df: DataFrame) -> list[str] | None:
         return None
     paths = []
     for uri in uris:
-        if uri.startswith("file://"):
-            paths.append(uri[len("file://"):])
-        elif uri.startswith("file:"):
-            paths.append(uri[len("file:"):])
-        elif uri.startswith("/"):
+        if uri.startswith("/"):
             paths.append(uri)
-        else:
+            continue
+        parts = urlsplit(uri)
+        if parts.scheme != "file":
             return None
+        paths.append(unquote(parts.path))
     return paths
 
 

@@ -204,7 +204,10 @@ class AgolRestClient:
         return self._request(f"/sharing/rest/content/items/{item_id}")
 
     def search(self, tag: str) -> list[dict]:
-        q = urllib.parse.quote_plus(f'tags:"{tag}"')
+        return self._search(f'tags:"{tag}"')
+
+    def _search(self, q: str) -> list[dict]:
+        q = urllib.parse.quote_plus(q)
         return self._request(f"/sharing/rest/search?q={q}&f=json")["results"]
 
     def delete(self, item_id: str) -> None:
@@ -241,18 +244,18 @@ def publish_df(
     ``(item_id, service_id)``.
 
     ``overwrite=True`` replaces the DATA of the item matching
-    ``props.title`` (found via tag/title search) while PRESERVING its
+    ``props.title`` (found via a search on its first tag, or on the
+    title itself when it has no tags) while PRESERVING its
     existing properties — the K6+K8 contract: backup (GET) -> payload
     update (POST) -> property restore (POST).  Without a match it falls
     through to a fresh publish.
     """
     payload = _ndjson(df, payload_limit)
     if overwrite:
-        hits = [
-            r
-            for r in client.search(props.tags[0] if props.tags else "")
-            if r.get("title") == props.title
-        ]
+        found = (
+            client.search(props.tags[0]) if props.tags else client._search(props.title)
+        )
+        hits = [r for r in found if r.get("title") == props.title]
         if hits:
             item_id = hits[0]["id"]
             backup = client.item_properties(item_id)  # K8 backup

@@ -74,6 +74,25 @@ def test_overwrite_replaces_data_preserves_properties(spark, portal):
     assert props["licenseInfo"] == "Public domain"
 
 
+def test_untagged_overwrite_finds_item_by_title(spark, portal):
+    """An overwrite of an item published without tags replaces that
+    item's data instead of adding a renamed copy."""
+    p, client = portal
+    item_id, svc = publish_df(
+        spark.range(3).selectExpr("id AS k"), client, ItemProperties(title="Untagged")
+    )
+    item2, svc2 = publish_df(
+        spark.range(2).selectExpr("id + 100 AS k"),
+        client,
+        ItemProperties(title="Untagged"),
+        overwrite=True,
+    )
+    assert (item2, svc2) == (item_id, svc)
+    assert sorted(it["properties"]["title"] for it in p.items.values()) == ["Untagged"]
+    back = read_service(spark, client, svc, "k long")
+    assert sorted(r.k for r in back.collect()) == [100, 101]
+
+
 def test_tag_search_inventory(spark, portal):
     _, client = portal
     df = spark.range(2).selectExpr("id AS k")

@@ -7,6 +7,7 @@ zero-row case."""
 
 from __future__ import annotations
 
+from erddap2agol_spark.operators import lm
 from erddap2agol_spark.operators.lm import BPE_SENTINEL_BASE, bpe_train
 
 from .test_opt_r09 import _persistent_rdd_ids
@@ -102,8 +103,8 @@ def test_early_stop_and_empty(spark):
     assert bpe_train(single, "text", n_merges=0).count() == 0
 
 
-def test_checkpoint_chain_releases_and_matches(spark):
-    """checkpoint_every smaller than n_merges must (a) not change the
+def test_checkpoint_chain_releases_and_matches(spark, monkeypatch):
+    """BPE_CHECKPOINT_EVERY smaller than n_merges must (a) not change the
     result and (b) leave ZERO net persistent-RDD blocks behind — the
     trainer's output is a local relation, so every internal checkpoint
     is engine-private and must be freed before return."""
@@ -112,13 +113,15 @@ def test_checkpoint_chain_releases_and_matches(spark):
         [(" ".join([w] * c),) for w, c in freq.items()], "text string"
     )
     base = _persistent_rdd_ids(spark)
-    a = [tuple(r) for r in bpe_train(docs, "text", 6, checkpoint_every=2).collect()]
-    b = [tuple(r) for r in bpe_train(docs, "text", 6, checkpoint_every=16).collect()]
+    monkeypatch.setattr(lm, "BPE_CHECKPOINT_EVERY", 2)
+    a = [tuple(r) for r in bpe_train(docs, "text", 6).collect()]
+    monkeypatch.setattr(lm, "BPE_CHECKPOINT_EVERY", 16)
+    b = [tuple(r) for r in bpe_train(docs, "text", 6).collect()]
     assert a == b == _py_bpe(freq, 6)
     assert not (_persistent_rdd_ids(spark) - base)
 
 
-def test_caller_checkpoint_input_survives(spark):
+def test_caller_checkpoint_input_survives(spark, monkeypatch):
     """Input-shield contract: a checkpoint-backed caller frame must
     remain readable after bpe_train's internal release chain runs."""
     from erddap2agol_spark.plans.lifecycle import release_checkpoints, truncate_lineage
@@ -126,7 +129,8 @@ def test_caller_checkpoint_input_survives(spark):
     docs = truncate_lineage(
         spark.createDataFrame([("low low lower",)], "text string")
     )
-    bpe_train(docs, "text", n_merges=3, checkpoint_every=1).collect()
+    monkeypatch.setattr(lm, "BPE_CHECKPOINT_EVERY", 1)
+    bpe_train(docs, "text", n_merges=3).collect()
     assert docs.count() == 1  # still readable
     release_checkpoints(docs)
 

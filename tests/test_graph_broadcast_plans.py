@@ -1,9 +1,13 @@
 """Plan-shape pins for the broadcast-regime iterative graph operators
 (operators/graph.py): in broadcast mode the per-round work must compile
 to map-side broadcast joins whose aggregates reuse the dst partitioning
-— adding rounds must add ZERO shuffle exchanges.  Each pin reads the
-operator's real returned plan (rounds above the checkpointed edge and
-degree leaves) and releases those checkpoints afterwards."""
+— adding rounds must add ZERO shuffle exchanges.  The |V| probe picks
+the regime, so each regime is reached through its graph: the dense
+complete graph K10 (average degree 9) takes the broadcast form, the
+sparse ``_EDGES`` graph (average degree ~2.8) the equi-join form.  Each
+pin reads the operator's real returned plan (rounds above the
+checkpointed edge and degree leaves) and releases those checkpoints
+afterwards."""
 
 from __future__ import annotations
 
@@ -21,6 +25,7 @@ from erddap2agol_spark.operators.graph import (
 from erddap2agol_spark.plans.lifecycle import release_checkpoints
 
 _EDGES = [(1, 2), (2, 3), (3, 1), (3, 4), (1, 4), (2, 4), (4, 5)]
+_K10 = [(i, j) for i in range(1, 11) for j in range(i + 1, 11)]
 
 
 def _plan_of(df) -> str:
@@ -53,16 +58,16 @@ def _edges(spark):
     return spark.createDataFrame(_EDGES, "a long, b long")
 
 
+def _dense(spark):
+    return spark.createDataFrame(_K10, "a long, b long")
+
+
 def test_lpa_broadcast_rounds_add_no_exchanges(spark):
     """The exchange count of the broadcast-mode LPA plan must be
     IDENTICAL at 2 and 6 iterations: every round is a broadcast join
     plus two aggregates that reuse HashPartitioning(dst)."""
-    p2 = _plan_of(
-        label_propagation(_edges(spark), 2, broadcast_labels=True)
-    )
-    p6 = _plan_of(
-        label_propagation(_edges(spark), 6, broadcast_labels=True)
-    )
+    p2 = _plan_of(label_propagation(_dense(spark), 2))
+    p6 = _plan_of(label_propagation(_dense(spark), 6))
     # required (ENSURE_REQUIREMENTS) exchanges must NOT scale with
     # rounds: both per-round aggregates reuse HashPartitioning(dst).
     assert _ensure_shuffles(p2) == _ensure_shuffles(p6), (
@@ -76,19 +81,15 @@ def test_lpa_equijoin_rounds_do_add_exchanges(spark):
     per-round join+aggs DO shuffle, so iterations scale the exchange
     count — proving the previous test's zero is the broadcast design,
     not an artifact of the counter."""
-    p2 = _plan_of(
-        label_propagation(_edges(spark), 2, broadcast_labels=False)
-    )
-    p6 = _plan_of(
-        label_propagation(_edges(spark), 6, broadcast_labels=False)
-    )
+    p2 = _plan_of(label_propagation(_edges(spark), 2))
+    p6 = _plan_of(label_propagation(_edges(spark), 6))
     assert _ensure_shuffles(p6) > _ensure_shuffles(p2)
 
 
 def test_pagerank_broadcast_rounds_are_broadcast_joins(spark):
     """Each round's rank join must compile to a BroadcastHashJoin in
     broadcast mode, every round reading the one dst-partitioned g."""
-    df = pagerank(_edges(spark), iterations=5, broadcast_ranks=True)
+    df = pagerank(_dense(spark), iterations=5)
     plan = _plan_of(df)
     assert plan.count("BroadcastHashJoin") >= 5
 
@@ -104,10 +105,8 @@ def test_regime_probe_dispatch(spark):
     p5 = _plan_of(label_propagation(_edges(spark), 5))
     assert _ensure_shuffles(p5) > _ensure_shuffles(p2)
     # dense: complete graph on 10 nodes -> avg degree 9 -> broadcast
-    k10 = [(i, j) for i in range(1, 11) for j in range(i + 1, 11)]
-    dense = spark.createDataFrame(k10, "a long, b long")
-    d2 = _plan_of(label_propagation(dense, 2))
-    d6 = _plan_of(label_propagation(dense, 6))
+    d2 = _plan_of(label_propagation(_dense(spark), 2))
+    d6 = _plan_of(label_propagation(_dense(spark), 6))
     assert _ensure_shuffles(d2) == _ensure_shuffles(d6)
 
 
@@ -147,14 +146,14 @@ def _deg_narrowed(df) -> bool:
     return g.group(1) == ""
 
 
-def test_pagerank_forced_broadcast_keeps_bigint_deg(spark):
-    """The int32 ``deg`` narrowing rests on the |V| probe: a caller who
-    forces ``broadcast_ranks=True`` skips the probe, so ``deg`` on the
-    edge relation stays a bigint.  The probed broadcast regime (dense
-    graph) still narrows it."""
-    forced = pagerank(_edges(spark), iterations=2, broadcast_ranks=True)
-    assert not _deg_narrowed(forced)
-    k10 = [(i, j) for i in range(1, 11) for j in range(i + 1, 11)]
-    probed = pagerank(spark.createDataFrame(k10, "a long, b long"), iterations=2)
-    assert _deg_narrowed(probed)
-    assert dict(forced.dtypes)["deg"] == "bigint"
+def test_pagerank_probed_regime_sets_deg_width(spark):
+    """The int32 ``deg`` narrowing rests on the |V| probe: the broadcast
+    regime (dense graph) narrows ``deg`` on the edge relation, the
+    equi-join regime (sparse graph) keeps the bigint.  The returned
+    ``deg`` is a bigint either way."""
+    dense = pagerank(_dense(spark), iterations=2)
+    assert dict(dense.dtypes)["deg"] == "bigint"
+    assert _deg_narrowed(dense)
+    sparse = pagerank(_edges(spark), iterations=2)
+    assert dict(sparse.dtypes)["deg"] == "bigint"
+    assert not _deg_narrowed(sparse)

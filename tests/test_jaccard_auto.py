@@ -76,47 +76,29 @@ def test_auto_prefix_branch_matches_posting_result(spark, skewed_docs):
     assert (0, 1) in got and (2, 3) in got
 
 
-def test_sampled_probe_agrees_with_exact(spark, uniform_docs, skewed_docs):
-    """The 100 TB probe mode: a deterministic half-rate doc sample with
-    the 1/r fan-out correction picks the same regime as the exact pass
-    on both planted fixtures."""
-    assert (
-        dedup.jaccard_regime_probe(
-            uniform_docs, "doc_id", "text", sample_rate=0.5
-        )
-        == "posting"
-    )
-    assert (
-        dedup.jaccard_regime_probe(skewed_docs, "doc_id", "text", sample_rate=0.5)
-        == "prefix"
-    )
-    with pytest.raises(ValueError, match="sample_rate"):
-        dedup.jaccard_regime_probe(uniform_docs, "doc_id", "text", sample_rate=0.0)
+@pytest.mark.parametrize("fixture", ["uniform_docs", "skewed_docs"])
+def test_auto_unpinned_probe_matches_pinned(spark, tmp_path, monkeypatch, request, fixture):
+    """A file-backed corpus above SHARED_EXPLODE_MAX_BYTES takes the
+    unpinned probe (the public jaccard_regime_probe over a fresh
+    explode) and returns the same pairs as the pinned shared-explode
+    path below the gate, on either regime's fixture."""
+    request.getfixturevalue(fixture).write.parquet(str(tmp_path / "docs"))
+    docs = spark.read.parquet(str(tmp_path / "docs"))
+    pinned_path = dedup.jaccard_pairs_auto(docs, "doc_id", "text", threshold=0.5)
+    expected = _pairs(pinned_path)
+    dedup.release_checkpoints(pinned_path)
 
+    probes = []
 
-def test_small_rate_probe_is_unbiased_on_uniform(spark):
-    """ADVICE r5: under binomial doc thinning E[sum(df_s^2)/sum(df_s)]
-    ~ r*ratio + (1-r), so a plain `/ r` correction inflates a perfectly
-    uniform corpus (true ratio ~1) to ~1/r — at the 100 TB sample rates
-    (r < 1/64) that mis-dispatched uniform corpora to the ~40x-slower
-    prefix regime. The additive-term-subtracting correction must keep
-    the uniform fixture in the posting regime at a 1% sample."""
-    rows = [
-        (i, " ".join(f"u{i}w{j}" for j in range(12))) for i in range(2000)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    assert (
-        dedup.jaccard_regime_probe(docs, "doc_id", "text", sample_rate=0.01)
-        == "posting"
-    )
+    def probe(*args, **kwargs):
+        probes.append(args)
+        return real_probe(*args, **kwargs)
 
-
-def test_fanout_threshold_is_the_dispatch_knob(spark, uniform_docs):
-    # forcing the threshold below 1 flips even the uniform corpus to the
-    # prefix branch — proving dispatch consults the probe, not the data
-    assert (
-        dedup.jaccard_regime_probe(
-            uniform_docs, "doc_id", "text", fanout_threshold=0.5
-        )
-        == "prefix"
-    )
+    real_probe = dedup.jaccard_regime_probe
+    monkeypatch.setattr(dedup, "jaccard_regime_probe", probe)
+    monkeypatch.setattr(dedup, "SHARED_EXPLODE_MAX_BYTES", 0)
+    unpinned = dedup.jaccard_pairs_auto(docs, "doc_id", "text", threshold=0.5)
+    assert len(probes) == 1
+    assert unpinned.columns == ["doc_a", "doc_b", "jaccard"]
+    assert _pairs(unpinned) == expected and expected
+    dedup.release_checkpoints(unpinned)

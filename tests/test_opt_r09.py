@@ -158,6 +158,27 @@ def test_ensure_parallelism_size_derived_target(spark, tmp_path):
     assert out is small
 
 
+def test_input_bytes_decodes_escaped_paths(spark, tmp_path):
+    """A scan under a directory whose name needs escaping (a space
+    reads ``%20`` in ``inputFiles()``) is still sized from the bytes on
+    disk, not given up on."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from erddap2agol_spark.plans.parallelism import input_bytes
+
+    d = tmp_path / "a b"
+    d.mkdir()
+    tbl = pa.table({"doc_id": pa.array(range(100)),
+                    "text": pa.array(["alpha beta gamma"] * 100)})
+    pq.write_table(tbl, str(d / "docs.parquet"))
+    df = spark.read.parquet(str(d))
+    assert any("%20" in u for u in df.inputFiles())
+    assert input_bytes(df) == os.path.getsize(d / "docs.parquet")
+
+
 def test_fanout_width_small_input_scales_with_weight(spark, tmp_path):
     """Small-input regime: an explicit width of ceil(bytes x weight /
     256 KiB), capped at defaultParallelism."""

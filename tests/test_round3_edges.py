@@ -9,13 +9,21 @@ from erddap2agol_spark.operators.graph import pagerank
 from erddap2agol_spark.operators.sampling import shuffle_order
 from erddap2agol_spark.operators.spatial import zorder_key
 from erddap2agol_spark.operators.text import bloom_contamination
+from erddap2agol_spark.plans.lifecycle import release_checkpoints
 
 from .test_opt_r09 import _persistent_rdd_ids
 
 
 def test_pagerank_empty_edges(spark):
+    """An empty graph returns an empty frame with the usual schema, and
+    releasing it frees everything the call checkpointed."""
     edges = spark.createDataFrame([], "a long, b long")
-    assert pagerank(edges).count() == 0
+    base = _persistent_rdd_ids(spark)
+    out = pagerank(edges)
+    assert out.dtypes == [("node", "bigint"), ("deg", "bigint"), ("rank", "double")]
+    assert out.count() == 0
+    release_checkpoints(out)
+    assert not (_persistent_rdd_ids(spark) - base)
 
 
 def test_pagerank_single_edge_symmetric(spark):

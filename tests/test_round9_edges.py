@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from erddap2agol_spark.operators.windows import grouped_row_number
+from erddap2agol_spark.queries import curation_queries
 from erddap2agol_spark.queries.curation_queries import build_corpus_manifest
 from erddap2agol_spark.sources.tables import load_table
 
@@ -50,16 +51,16 @@ def test_corpus_manifest_parametric_shards(spark):
         assert sorted(poss) == list(range(1, len(poss) + 1))
 
 
-def test_corpus_manifest_derived_shards(spark):
+def test_corpus_manifest_derived_shards(spark, monkeypatch):
     """n_shards=None derives the count from corpus size: a tiny
-    target_docs_per_shard must yield MORE than the 8-shard floor, so a
+    MANIFEST_DOCS_PER_SHARD must yield MORE than the 8-shard floor, so a
     100 TB corpus cannot be funneled through 8 window partitions."""
     docs = load_table(spark, SF, "documents")
     n_corpus = docs.where(~F.col("source").isin("src0", "src1")).count()
-    target = max(1, n_corpus // 20)
-    m = build_corpus_manifest(
-        docs, ("src0", "src1"), n_shards=None, target_docs_per_shard=target
+    monkeypatch.setattr(
+        curation_queries, "MANIFEST_DOCS_PER_SHARD", max(1, n_corpus // 20)
     )
+    m = build_corpus_manifest(docs, ("src0", "src1"), n_shards=None)
     kept = m.where(F.col("keep") == 1)
     n_shards_seen = kept.select("shard").distinct().count()
     assert n_shards_seen > 8

@@ -176,25 +176,6 @@ def test_ngram_jaccard_max_doc_freq_drops_boilerplate_pairs(spark, boilerplate_d
             assert j <= unc[p] + 1e-9
 
 
-def test_lsh_band_salting_result_invariant(spark, boilerplate_docs):
-    from erddap2agol_spark.operators import dedup
-
-    base = {
-        (r.doc_a, r.doc_b)
-        for r in dedup.lsh_candidate_pairs(
-            boilerplate_docs, "doc_id", "text", n_perm=8, rows_per_band=2
-        ).collect()
-    }
-    salted = {
-        (r.doc_a, r.doc_b)
-        for r in dedup.lsh_candidate_pairs(
-            boilerplate_docs, "doc_id", "text", n_perm=8, rows_per_band=2,
-            n_salts=4,
-        ).collect()
-    }
-    assert base == salted and base  # identical pairs, non-empty
-
-
 def test_dedup_pair_builders_release_scaffolding(spark):
     """VERDICT r3 #3: lsh_candidate_pairs / ngram_jaccard_pairs must not
     leak their internal persist (signature table / shingle explode)
@@ -227,3 +208,64 @@ def test_dedup_pair_builders_release_scaffolding(spark):
     assert len(rdd_ids() - base) == 1  # result only; shingle cache released
     release_checkpoints(out2)
     assert not (rdd_ids() - base)
+
+
+def test_aqe_splits_hot_lsh_bucket(spark):
+    """A boilerplate corpus collapses hundreds of docs into one LSH band
+    bucket; the session's AQE skew-join handling splits that bucket's
+    sort-merge join partition at run time, so the band self-join needs
+    no hand-salted form, and the split join finds exactly the pairs
+    ``lsh_candidate_pairs`` finds on the default session.  The skew
+    thresholds, and the advisory size AQE splits a skewed partition
+    down to, are lowered to this corpus's size (test-local, restored
+    afterwards)."""
+    from erddap2agol_spark.operators.dedup import (
+        band_keys,
+        lsh_candidate_pairs,
+        minhash_signatures,
+    )
+    from erddap2agol_spark.plans.lifecycle import release_checkpoints
+
+    boiler = "all rights reserved copyright two thousand site inc"
+    rows = [(i, boiler) for i in range(300)] + [
+        (300 + i, " ".join(f"d{i}w{j}" for j in range(12))) for i in range(300)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    lsh = lsh_candidate_pairs(docs, "doc_id", "text", n_perm=8, rows_per_band=2)
+    expected = {tuple(r) for r in lsh.collect()}
+    release_checkpoints(lsh)
+    assert len(expected) == 300 * 299 // 2
+    conf = {
+        "spark.sql.shuffle.partitions": "64",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes": "1k",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "1k",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    try:
+        for k, v in conf.items():
+            spark.conf.set(k, v)
+        bands = band_keys(minhash_signatures(docs, "doc_id", "text"), 8, 2)
+        pairs = (
+            bands.alias("a")
+            .join(
+                bands.alias("b"),
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.band_sig") == F.col("b.band_sig"))
+                & (F.col("a.doc") < F.col("b.doc")),
+            )
+            .select(F.col("a.doc").alias("doc_a"), F.col("b.doc").alias("doc_b"))
+            .distinct()
+        )
+        assert {tuple(r) for r in pairs.collect()} == expected
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        assert "isFinalPlan=true" in plan
+        assert "SortMergeJoin(skew=true)" in plan, plan
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

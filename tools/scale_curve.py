@@ -149,7 +149,7 @@ EMB_PAIR_QUERIES = ["emb_near_dup_cells"]
 # count — naive duplication (same partkeys) would instead keep |V|
 # fixed and only inflate edge WEIGHTS, measuring the aggregate, not the
 # graph.  The broadcast regime holds throughout (avg degree invariant,
-# |V| stays under broadcast_nodes_max to x64 at this base), so the
+# |V| stays under graph.BROADCAST_NODES_MAX to x64 at this base), so the
 # curve isolates the claim that the edge list shuffles once for ALL
 # rounds while the per-round broadcast grows with |V|.
 GRAPH_QUERIES = [
